@@ -39,10 +39,9 @@ from urbanistic_polygons_spark import datagen  # noqa: E402
 from urbanistic_polygons_spark.operators.classify import (  # noqa: E402
     classify_barrier_ways, classify_landuse_ways)
 from urbanistic_polygons_spark.operators.graph_build import (  # noqa: E402
-    build_faces_from_ways, build_graph_tables, classify_barriers,
-    planarize_edges, split_ways_to_edges)
+    barrier_edges, build_faces, build_graph_tables)
 from urbanistic_polygons_spark.operators.landuse_join import (  # noqa: E402
-    assign_landuse, dominant_type)
+    assign_landuse, dominant_type, landuse_rings)
 from urbanistic_polygons_spark.operators.merge import (  # noqa: E402
     merge_faces, segment_resistance)
 from urbanistic_polygons_spark.plans.lineage import LineageStore  # noqa: E402
@@ -69,46 +68,29 @@ def run(spark, workdir: str, k: int = 6,
     ways = spark.createDataFrame(
         ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
 
+    # the planar barrier edges, derived once: graph tables, faces and the
+    # merge resistance all read this one materialized edge set
+    edges = barrier_edges(nodes, ways).localCheckpoint(eager=True)
+
     # stage 1: entity tables (vertex/edge GUIDs = the cross-partition
     # join keys, reference TiledBarrierGraphSerializer.cs:14-85)
-    vertices, g_edges = build_graph_tables(nodes, ways)
+    vertices, g_edges = build_graph_tables(edges)
     run_stage("graph_vertices", vertices, "tile_id")
     run_stage("graph_edges", g_edges, "v1_tile")
 
     # stage 2: faces (checkpoint consumed by every later stage: resume
     # after a kill re-reads the committed faces, never re-walks)
-    faces = build_faces_from_ways(nodes, ways)
+    faces = build_faces(edges)
     faces = run_stage("faces", faces, "anchor_cell")
     faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
 
     # stage 3: dominant landuse per face
-    lu_ways = classify_landuse_ways(spark, ways)
-    pts = (lu_ways.select("way_id", "cls",
-                          F.posexplode("nodes").alias("pos", "node_id"))
-           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
-    rings = (pts.groupBy("way_id")
-             .agg(F.array_sort(F.collect_list(
-                 F.struct("pos", "lon", "lat"))).alias("p"),
-                 F.first("cls").alias("cls"))
-             .select(F.col("way_id").alias("lu_id"), "cls",
-                     F.concat_ws(";", F.transform(
-                         "p", lambda q: F.format_string(
-                             "%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
-                     F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
-                     F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
-                     F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
-                     F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat")))
+    rings = landuse_rings(nodes, classify_landuse_ways(spark, ways))
     dom = (dominant_type(assign_landuse(faces, rings))
            .join(faces.select("face_guid", "anchor_cell"), "face_guid"))
     dom = run_stage("landuse", dom, "anchor_cell")
 
-    # stage 4: merge-by-similarity regions.  Edges MUST be planarized to
-    # match the faces (built with planarize_crossings=True): on crossing
-    # non-noded ways, face boundary segments split at the intersection
-    # point, and unplanarized edge unit segments would never match those
-    # keys -> every such boundary falls to _DEFAULT_RESISTANCE and
-    # legitimate merges are silently blocked.
-    edges = planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
+    # stage 4: merge-by-similarity regions over the same planar edges
     seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
     merged = merge_faces(faces, seg_res, merge_threshold,
                          dominant=dom.select("face_guid", "dominant_cls"))

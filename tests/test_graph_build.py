@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from urbanistic_polygons_spark import datagen
 from urbanistic_polygons_spark.operators.graph_build import (
-    bucket_edges_by_cell, build_faces_from_ways, classify_barriers,
+    barrier_edges, bucket_edges_by_cell, build_faces, classify_barriers,
     detect_vertices, resolve_way_nodes, split_ways_to_edges,
 )
 
@@ -51,7 +51,7 @@ def test_split_edges_count_and_orientation(grid):
 
 def test_faces_grid(spark, grid):
     nodes, ways = grid
-    faces = build_faces_from_ways(nodes, ways).toPandas()
+    faces = build_faces(barrier_edges(nodes, ways)).toPandas()
     # (k-1)^2 interior cells + 1 exterior ring face
     assert len(faces) == (K - 1) ** 2 + 1
     assert faces.face_guid.nunique() == len(faces)
@@ -63,19 +63,16 @@ def test_faces_grid(spark, grid):
 
 def test_faces_partition_invariance(spark, grid):
     nodes, ways = grid
-    a = build_faces_from_ways(nodes, ways).toPandas()
-    b = build_faces_from_ways(nodes.repartition(7), ways.repartition(5)).toPandas()
+    a = build_faces(barrier_edges(nodes, ways)).toPandas()
+    b = build_faces(barrier_edges(nodes.repartition(7),
+                                  ways.repartition(5))).toPandas()
     assert sorted(a.face_guid) == sorted(b.face_guid)
 
 
 def test_build_faces_planarizes_crossings(spark):
     """End-to-end J4 wiring: a square with NON-NODED crossing diagonals
-    yields the 4 triangular faces only when planarize_crossings=True."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from urbanistic_polygons_spark.operators.graph_build import (
-        build_faces_from_ways,
-    )
+    yields the 4 triangular faces only from the planarized barrier_edges;
+    the raw split edges cannot close them."""
     B_LON, B_LAT, S = 4.78, 51.26, 0.004
     corners = [(1, B_LON, B_LAT), (2, B_LON + S, B_LAT),
                (3, B_LON + S, B_LAT + S), (4, B_LON, B_LAT + S)]
@@ -86,10 +83,9 @@ def test_build_faces_planarizes_crossings(spark):
          (11, [1, 3], tags),            # diagonal (crosses 12, not noded)
          (12, [2, 4], tags)],
         "way_id long, nodes array<long>, tags map<string,string>")
-    flat = build_faces_from_ways(nodes, ways, planarize_crossings=True)
-    n_flat = flat.count()
-    raw = build_faces_from_ways(nodes, ways, planarize_crossings=False)
-    n_raw = raw.count()
+    n_flat = build_faces(barrier_edges(nodes, ways)).count()
+    n_raw = build_faces(
+        split_ways_to_edges(nodes, classify_barriers(ways))).count()
     # 4 triangles + the unbounded exterior face (a fully-loaded graph's
     # outer walk closes and is a normal face — same convention as the
     # reference and the 6x6 grid's 25+1=26)
@@ -118,7 +114,7 @@ def test_graph_tables_guids_and_roundtrip(spark, tmp_path):
         nodes_pdf, schema="node_id long, lon double, lat double")
     ways = spark.createDataFrame(
         ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
-    vertices, edges = build_graph_tables(nodes, ways)
+    vertices, edges = build_graph_tables(barrier_edges(nodes, ways))
     vp = vertices.toPandas()
     ep = edges.toPandas()
 

@@ -8,7 +8,7 @@ import pytest
 from urbanistic_polygons_spark import datagen
 from urbanistic_polygons_spark.operators.classify import classify_barrier_ways
 from urbanistic_polygons_spark.operators.graph_build import (
-    build_faces_from_ways, classify_barriers, split_ways_to_edges)
+    barrier_edges, build_faces, classify_barriers, split_ways_to_edges)
 from urbanistic_polygons_spark.operators.merge import (
     face_boundary_segments, interior_faces, merge_faces, mergeable_pairs,
     segment_resistance)
@@ -22,7 +22,7 @@ def lattice(spark):
         nodes_pdf, schema="node_id long, lon double, lat double")
     ways = spark.createDataFrame(
         ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
-    faces = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
+    faces = build_faces(barrier_edges(nodes, ways)).localCheckpoint(eager=True)
     return nodes, ways, faces
 
 
@@ -110,7 +110,7 @@ def test_merge_multi_cell_lattice(spark):
         "tags", F.when(F.col("way_id") == 18,   # vertical street x=6
                        F.create_map(F.lit("highway"), F.lit("motorway")))
         .otherwise(F.col("tags")))
-    faces = build_faces_from_ways(nodes, ways, max_ring=1)
+    faces = build_faces(barrier_edges(nodes, ways), max_ring=1)
     faces = faces.localCheckpoint(eager=True)
     assert faces.count() == 121                 # 11x11; outer face dropped
     assert faces.select("anchor_cell").distinct().count() > 30
@@ -141,24 +141,46 @@ def test_dominance_gate_splits_regions(lattice):
     assert sizes == [3, 6]
 
 
-def test_graph_pipeline_stages_and_resume(spark, tmp_path):
+def test_graph_pipeline_stages_and_resume(spark, tmp_path, monkeypatch):
     """E2 bulk-build analog: the 5-stage graph pipeline (entity tables ->
     faces -> landuse -> merge -> tiles) commits LineageStore snapshots;
     a re-run with the same workdir skips every committed partition (adds
-    0 rows) and reproduces identical stage counters."""
+    0 rows) and reproduces identical stage counters.  Each run derives the
+    planar barrier edges exactly once (one split, one planarize) and
+    shares them across graph tables, faces and merge."""
     import sys
+    from collections import Counter
     from pathlib import Path
+
+    from urbanistic_polygons_spark.operators import graph_build, planarize
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
     import run_graph_pipeline as P
 
+    calls = Counter()
+
+    def count_calls(module, name):
+        real = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+        monkeypatch.setattr(module, name, wrapper)
+
+    count_calls(graph_build, "split_ways_to_edges")
+    count_calls(planarize, "planarize")
+    once = {"split_ways_to_edges": 1, "planarize": 1}
+
     wd = str(tmp_path / "graph_wd")
     r1 = P.run(spark, wd, k=4)
+    assert calls == once, calls
     assert set(r1["stages"]) == {"graph_vertices", "graph_edges", "faces",
                                  "landuse", "merge", "tiles"}
     assert r1["stages"]["faces"]["rows"] == 10     # 3x3 + outer
     assert r1["stages"]["merge"]["rows"] == 9      # interior only
     assert r1["stages"]["tiles"]["rows"] >= 1
+    calls.clear()
     r2 = P.run(spark, wd, k=4)
+    assert calls == once, calls
     # resume: no stage adds rows, counters identical
     for name, s1 in r1["stages"].items():
         assert r2["stages"][name]["rows"] == s1["rows"], name
@@ -167,7 +189,7 @@ def test_graph_pipeline_stages_and_resume(spark, tmp_path):
 
 def test_crossing_ways_boundary_segments_match(spark):
     """TRUE crossing without a shared node (ADVICE r3): faces are built
-    with planarize_crossings=True, so their boundary segments split at
+    from the planarized barrier_edges, so their boundary segments split at
     the intersection point.  segment_resistance fed UNPLANARIZED edges
     leaves those keys unmatched (merge fails safe = blocked); fed
     PLANARIZED edges (the pipeline's stage-4 form) every boundary
@@ -186,7 +208,7 @@ def test_crossing_ways_boundary_segments_match(spark):
          (12, [2, 4], tags)],           # crossing diagonal, NOT noded
         schema="way_id long, nodes array<long>, tags map<string,string>")
 
-    faces = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
+    faces = build_faces(barrier_edges(nodes, ways)).localCheckpoint(eager=True)
     inter = interior_faces(faces)
     assert inter.count() == 4           # 4 triangles
     segs = face_boundary_segments(inter)

@@ -26,7 +26,7 @@ import pytest
 
 from urbanistic_polygons_spark.catalog import TABLES, build_catalog
 
-from test_catalog_oracle import canon
+from test_catalog_oracle import SF_DIR, canon
 
 CATALOG = build_catalog()
 
@@ -135,3 +135,32 @@ def test_random_numeric_oracle(spark, numeric_dirs, name, seed):
     assert len(got) > 0, f"{name}@seed{seed}: empty result"
     pd.testing.assert_frame_equal(got, exp, check_dtype=False,
                                   check_exact=True, obj=f"{name}@{seed}")
+
+
+def test_morans_i_empty_orders(spark, tmp_path):
+    """Empty input: both sides return the one summary row the oracle's
+    scalar subqueries give — n_cells=0, w_pairs=0, NULL numerator and
+    denominator."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(pq.read_table(f"{SF_DIR}/orders.parquet").slice(0, 0),
+                   tmp_path / "orders.parquet")
+    for t in TABLES:
+        if t != "orders":
+            os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    spec = CATALOG["morans_i"]
+    got = canon(spec["spark"](spark, str(tmp_path)).toArrow(),
+                "morans_i", "spark")
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{tmp_path}/{t}.parquet')")
+        exp = canon(con.execute(spec["oracle"]).arrow(), "morans_i", "oracle")
+    finally:
+        con.close()
+    assert len(exp) == 1
+    assert exp.n_cells[0] == 0 and exp.w_pairs[0] == 0
+    assert pd.isna(exp.moran_num[0]) and pd.isna(exp.moran_den[0])
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False,
+                                  check_exact=True, obj="morans_i@empty")

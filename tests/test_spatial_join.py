@@ -7,7 +7,7 @@ import pytest
 
 from urbanistic_polygons_spark import datagen, kernels
 from urbanistic_polygons_spark.operators.spatial_join import (
-    assign_documents, assign_points, extract_geo_points,
+    assign_documents, extract_geo_points,
 )
 
 N_DOCS = 300
@@ -145,8 +145,9 @@ def test_knn_block_semantics(spark):
 
 def test_pip_only_points_inside(data):
     _, polys_pdf, docs, polys = data
-    pts = extract_geo_points(docs)
-    hits = assign_points(pts, polys).toPandas()
+    hits = (assign_documents(docs, polys).filter("method = 'pip'")
+            .toPandas())
+    assert len(hits) > 0
     rings = {}
     for r in polys_pdf.itertuples(index=False):
         p = np.array([q.split() for q in r.ring.split(";")], dtype=np.float64)

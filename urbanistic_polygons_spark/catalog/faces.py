@@ -44,9 +44,9 @@ def _grid_faces(spark) -> DataFrame:
     key = (id(spark), spark.sparkContext.applicationId)
     df = _GRID_FACES_CACHE.get(key)
     if df is None:
-        from ..operators.graph_build import build_faces_from_ways
+        from ..operators.graph_build import barrier_edges, build_faces
         nodes, ways = _grid_graph(spark)
-        df = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
+        df = build_faces(barrier_edges(nodes, ways)).localCheckpoint(eager=True)
         _GRID_FACES_CACHE[key] = df
     return df
 
@@ -121,32 +121,10 @@ def _grid_landuse(spark):
     if memo is not None:
         return memo
     from ..operators.classify import classify_landuse_ways
+    from ..operators.landuse_join import landuse_rings
     nodes, ways = _grid_graph(spark)
-    lu = classify_landuse_ways(spark, ways)
-    # cls rides the explode + groupBy shuffle (FIRST per way) instead of a
-    # second way-keyed join-back — lu has ONE row per landuse way, the
-    # same cardinality as the rings, so a join here is an avoidable
-    # full-width shuffle at scale (and at fixture scale an SMJ in the
-    # audited plan)
-    pts = (lu.select("way_id", "cls",
-                     F.posexplode("nodes").alias("pos", "node_id"))
-           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
-    rings = (
-        pts.groupBy("way_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("p"),
-             F.first("cls").alias("cls"))
-        .select(
-            F.col("way_id").alias("lu_id"),
-            "cls",
-            F.concat_ws(";", F.transform(
-                "p", lambda q: F.format_string("%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
-            F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
-            F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
-            F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
-            F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat"),
-        )
-    )
-    rings = rings.localCheckpoint(eager=True)
+    rings = landuse_rings(nodes, classify_landuse_ways(spark, ways)
+                          ).localCheckpoint(eager=True)
     _GRID_LANDUSE_CACHE[key] = rings
     return rings
 
@@ -580,8 +558,7 @@ def _merge_fixture(spark):
     unit segments, and per-face dominant landuse.  Face GEOMETRY is
     tag-independent, so the memoized fixture faces are reused."""
     from ..operators.classify import classify_barrier_ways
-    from ..operators.graph_build import (classify_barriers, planarize_edges,
-                                        split_ways_to_edges)
+    from ..operators.graph_build import barrier_edges
     from ..operators.landuse_join import assign_landuse, dominant_type
     from ..operators.merge import segment_resistance
 
@@ -594,8 +571,8 @@ def _merge_fixture(spark):
               F.create_map(F.lit("highway"), F.lit("tertiary")))
         .otherwise(F.col("tags")))
     faces = _grid_faces(spark)
-    edges = planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
-    seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
+    seg_res = segment_resistance(barrier_edges(nodes, ways),
+                                 classify_barrier_ways(spark, ways))
     dom = dominant_type(assign_landuse(faces, _grid_landuse(spark)))
     return faces, seg_res, dom
 

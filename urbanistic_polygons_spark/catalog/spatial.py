@@ -482,9 +482,10 @@ def q_morans_i_spark(spark, sf_dir):
          .localCheckpoint(eager=True))     # consumers: N/S scalar, d
     n, s = c.agg(F.count("*"), F.sum("x")).collect()[0]
     d = (c.select("cell_x", "cell_y",
-                  (F.col("x") * F.lit(int(n)) - F.lit(int(s))).alias("di"))
+                  (F.col("x") * F.lit(n) - F.lit(s or 0)).alias("di"))
          .localCheckpoint(eager=True))     # consumers: probe, home, den
-    den = int(d.agg(F.sum(F.col("di") * F.col("di"))).collect()[0][0])
+    # SUM over no cells is NULL, as in the oracle (empty orders)
+    den = d.agg(F.sum(F.col("di") * F.col("di"))).collect()[0][0]
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
             if (dx, dy) != (0, 0)]
     probe = (d.select(
@@ -501,6 +502,6 @@ def q_morans_i_spark(spark, sf_dir):
     return (nb.agg(F.count("*").cast("long").alias("w_pairs"),
                    F.sum(F.col("da") * F.col("db")).cast("long")
                    .alias("moran_num"))
-            .select(F.lit(int(n)).cast("long").alias("n_cells"),
+            .select(F.lit(n).cast("long").alias("n_cells"),
                     "w_pairs", "moran_num",
                     F.lit(den).cast("long").alias("moran_den")))

@@ -38,10 +38,6 @@ def cell_id(lon: Column, lat: Column, zoom: int = DEFAULT_ZOOM) -> Column:
     return (tile_y(lat, zoom) * F.lit(n) + tile_x(lon, zoom)).alias("cell_id")
 
 
-def cell_id_from_xy(x: Column, y: Column, zoom: int = DEFAULT_ZOOM) -> Column:
-    return y * F.lit(1 << zoom) + x
-
-
 def cell_x(cell: Column, zoom: int = DEFAULT_ZOOM) -> Column:
     return cell % F.lit(1 << zoom)
 

@@ -196,18 +196,6 @@ def vertex_guid(qx: int, qy: int, tile_id: int) -> str:
     return _uuid5_bytes(NS_VERTEX, _loc_bytes(qx, qy, tile_id))
 
 
-def vertex_guids(qx: np.ndarray, qy: np.ndarray, tile_id: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`vertex_guid` (a Python loop over an Arrow batch on
-    executors — never per-row through Spark)."""
-    qx = np.asarray(qx, np.int64)
-    qy = np.asarray(qy, np.int64)
-    tid = np.asarray(tile_id, np.int64)
-    out = np.empty(len(qx), dtype=object)
-    for i in range(len(qx)):
-        out[i] = _uuid5_bytes(NS_VERTEX, _loc_bytes(qx[i], qy[i], tid[i]))
-    return out
-
-
 def edge_guid(shape_q: np.ndarray) -> str:
     """Edge id from the concatenated complete quantized shape
     ``[(qx, qy, tile_id), ...]`` including both end vertices, always in the
@@ -276,21 +264,6 @@ def offset_with_distance_x(lon, lat, meter) -> np.ndarray:
     probe = 0.001
     lon_distance = distance_m(lon, lat, lon + probe, lat)
     return lon + (np.asarray(meter, np.float64) / lon_distance) * probe
-
-
-def angle_clockwise(cx, cy, ax, ay, bx, by) -> np.ndarray:
-    """Clockwise angle at point C from ray C->A to ray C->B, in [0, 2pi).
-
-    Replicates the *behavior* of reference Geo/GeoExtensions.cs:21-200
-    (Angle): the angular order of edges around a vertex used by
-    NextClockwise.  We use atan2 which is monotonically consistent with the
-    reference's quadrant-stable asin/acos construction for ordering purposes
-    (the reference only ever uses these angles as sort keys,
-    Faces/TiledBarrierGraphExtensions.cs:20-28).
-    """
-    a = np.arctan2(np.asarray(ay, np.float64) - cy, np.asarray(ax, np.float64) - cx)
-    b = np.arctan2(np.asarray(by, np.float64) - cy, np.asarray(bx, np.float64) - cx)
-    return np.mod(a - b, 2.0 * np.pi)
 
 
 def signed_area(lon: np.ndarray, lat: np.ndarray) -> float:

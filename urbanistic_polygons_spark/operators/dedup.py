@@ -18,6 +18,8 @@ nothing is O(n^2); AQE skew-join handles hot buckets.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -65,6 +67,9 @@ def ensure_metrics_survive(df: DataFrame) -> None:
         spark.conf.set(key, cur + "," + rule)
 
 
+_cut_lineage_warned = False
+
+
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` + drop the checkpoint's inherited size estimate
     — the lineage cut an ITERATIVE SELF-JOINING loop must use.
@@ -88,8 +93,8 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     ``defaultSizeInBytes``; every join these loops run is
     corpus-proportional on both sides (never a broadcast candidate), so
     the reset costs nothing in plan quality.  Uses the classic-Dataset
-    internals via py4j; any drift in that internal API degrades
-    gracefully to a plain (un-stripped) checkpoint."""
+    internals via py4j; any drift in that internal API degrades to a
+    plain (un-stripped) checkpoint and warns once per process."""
     ck = df.localCheckpoint(eager=eager)
     try:
         spark = df.sparkSession
@@ -103,7 +108,15 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
         jnew = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             jdf.sparkSession(), stripped)
         return DataFrame(jnew, spark)
-    except Exception:
+    except Exception as exc:
+        global _cut_lineage_warned
+        if not _cut_lineage_warned:
+            _cut_lineage_warned = True
+            warnings.warn(
+                f"cut_lineage could not strip the checkpoint's inherited "
+                f"statistics ({exc!r}); falling back to a plain "
+                f"localCheckpoint, so self-joining loops may square their "
+                f"size estimate every round", RuntimeWarning, stacklevel=2)
         return ck
 
 

@@ -141,6 +141,23 @@ def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     return edges.join(ways.select("way_id", "tag_sig"), "way_id")
 
 
+def _bbox_cols() -> list:
+    """min_lon..max_lat over both endpoints plus the ``shape_pts`` points."""
+    shape_tokens = F.filter(
+        F.split(F.coalesce("shape_pts", F.lit("")), ";"),
+        lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
+    shape_lons = F.transform(shape_tokens,
+                             lambda p: F.split(p, " ")[0].cast("double"))
+    shape_lats = F.transform(shape_tokens,
+                             lambda p: F.split(p, " ")[1].cast("double"))
+    all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
+    all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
+    return [F.array_min(all_lons).alias("min_lon"),
+            F.array_min(all_lats).alias("min_lat"),
+            F.array_max(all_lons).alias("max_lon"),
+            F.array_max(all_lats).alias("max_lat")]
+
+
 def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     """G4 (declarative variant): contract degree-2 vertices by merging their
     two incident edges, shapes concatenated through the removed vertex —
@@ -244,22 +261,7 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
             F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
                 F.when(fwd, F.col("mid_str")).otherwise(rev_mid)).alias("shape_pts"),
         )
-        # recompute bbox over endpoints + shape
-        shape_tokens = F.filter(
-            F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-            lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
-        shape_lons = F.transform(shape_tokens,
-                                 lambda p: F.split(p, " ")[0].cast("double"))
-        shape_lats = F.transform(shape_tokens,
-                                 lambda p: F.split(p, " ")[1].cast("double"))
-        all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
-        all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
-        new_edges = new_edges.select(
-            "*",
-            F.array_min(all_lons).alias("min_lon"),
-            F.array_min(all_lats).alias("min_lat"),
-            F.array_max(all_lons).alias("max_lon"),
-            F.array_max(all_lats).alias("max_lat"))
+        new_edges = new_edges.select("*", *_bbox_cols())
         dropped = (sides.select("ekey").distinct())
         survivors = (e.join(dropped, "ekey", "left_anti")
                      .select(*[c for c in edges.columns]))
@@ -320,25 +322,22 @@ def planarize_edges(edges: DataFrame) -> DataFrame:
                        F.split("edge_key", "#").getItem(0).cast("long"))
            .withColumn("seg", F.row_number().over(w) - 1)
            .drop("edge_key"))
-    shape_tokens = F.filter(
-        F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-        lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
-    shape_lons = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[0].cast("double"))
-    shape_lats = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[1].cast("double"))
-    all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
-    all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
     flat_edges = out.select(
         "way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts",
-        F.array_min(all_lons).alias("min_lon"),
-        F.array_min(all_lats).alias("min_lat"),
-        F.array_max(all_lons).alias("max_lon"),
-        F.array_max(all_lats).alias("max_lat"))
+        *_bbox_cols())
     if "tag_sig" in edges.columns:  # re-attach the per-way G4 signature
         flat_edges = flat_edges.join(
             edges.select("way_id", "tag_sig").distinct(), "way_id")
     return flat_edges
+
+
+def barrier_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
+    """The planar barrier edge set of one graph build: F1 classify -> G2/G5
+    split -> J4 planarize.  Graph tables, faces and merge resistance all
+    take this one edge set (the reference runs faces and landuse on the
+    same planarized tile graph), so merge boundary segments match the face
+    boundaries by construction."""
+    return planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
 
 
 GRAPH_EDGES_SCHEMA = (
@@ -396,14 +395,13 @@ def _edge_guids_kernel(batches):
             "v2_lon": pdf["v2_lon"], "v2_lat": pdf["v2_lat"]})
 
 
-def build_graph_tables(nodes: DataFrame, ways: DataFrame,
-                       planarize_crossings: bool = True,
-                       prune: bool = True) -> tuple[DataFrame, DataFrame]:
+def build_graph_tables(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The reference's full per-tile graph artifact: VERTICES and EDGES
     tables with content-addressed GUIDs — the cross-partition join keys
-    (SURVEY §1.1) — alongside the faces that build_faces_from_ways emits
+    (SURVEY §1.1) — alongside the faces that build_faces emits
     (reference Serialization/TiledBarrierGraphSerializer.cs:14-85
-    checkpoints all three per tile).
+    checkpoints all three per tile).  ``edges`` is the barrier_edges set;
+    the tables carry it G4-contracted.
 
     Returns (vertices, edges):
       vertices(vertex_guid, tile_id, lon, lat) — endpoint vertices,
@@ -411,13 +409,8 @@ def build_graph_tables(nodes: DataFrame, ways: DataFrame,
       edges(edge_guid, v1_guid, v2_guid, v1_tile, v2_tile, way_id, seg,
         tag_sig, shape_pts, v1_lon..v2_lat) — standardized, G4-contracted.
     """
-    barriers = classify_barriers(ways)
-    edges = split_ways_to_edges(nodes, barriers)
-    if planarize_crossings:
-        edges = planarize_edges(edges)
-    if prune:
-        edges = prune_shape_points(edges)
-    g_edges = edges.mapInPandas(_edge_guids_kernel, GRAPH_EDGES_SCHEMA)
+    g_edges = prune_shape_points(edges).mapInPandas(
+        _edge_guids_kernel, GRAPH_EDGES_SCHEMA)
     v1 = g_edges.select(F.col("v1_guid").alias("vertex_guid"),
                         F.col("v1_tile").alias("tile_id"),
                         F.col("v1_lon").alias("lon"),
@@ -451,11 +444,9 @@ def read_graph(store, stage_prefix: str = "graph"):
             .dropDuplicates(["edge_guid"]))
 
 
-def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
-                          max_ring: int = 4,
-                          planarize_crossings: bool = True) -> DataFrame:
-    """End-to-end: barrier ways -> planar edges -> per-cell face polygons
-    with content-addressed GUIDs, cross-cell dedup'd.
+def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
+    """Barrier edges (barrier_edges) -> per-cell face polygons with
+    content-addressed GUIDs, cross-cell dedup'd.
 
     G6 missing-tile expansion, batched: anchors whose face walks leave their
     halo (sentinel rows from the kernel) are retried with a 1-bigger halo —
@@ -465,10 +456,6 @@ def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
     """
     from .faces import extract_faces
 
-    barriers = classify_barriers(ways)
-    edges = split_ways_to_edges(nodes, barriers)
-    if planarize_crossings:
-        edges = planarize_edges(edges)
     edges = edges.cache()
 
     results = []
@@ -491,7 +478,7 @@ def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
             # implicit unbounded face) are dropped, but never silently:
             n_incomplete = retry_anchors.count()
             log.warning(
-                "build_faces_from_ways: %d anchor cell(s) still had "
+                "build_faces: %d anchor cell(s) still had "
                 "incomplete face walks at max_ring=%d; their oversized "
                 "faces (usually the unbounded outer face) are omitted",
                 n_incomplete, max_ring)

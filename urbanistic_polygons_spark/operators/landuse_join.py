@@ -78,6 +78,35 @@ def _with_cells(df: DataFrame) -> DataFrame:
                 lambda cx: cy * F.lit(1 << 14) + cx)))))
 
 
+def landuse_rings(nodes: DataFrame, landuse_ways: DataFrame) -> DataFrame:
+    """S8: classified landuse ways (way_id, cls, nodes) -> the landuse
+    polygon layer (lu_id, cls, ring, min_lon..max_lat) assign_landuse
+    joins against.
+
+    cls rides the explode + groupBy shuffle (FIRST per way) instead of a
+    second way-keyed join-back — there is ONE row per landuse way, the
+    same cardinality as the rings, so a join here is an avoidable
+    full-width shuffle at scale."""
+    pts = (landuse_ways.select("way_id", "cls",
+                               F.posexplode("nodes").alias("pos", "node_id"))
+           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
+    return (
+        pts.groupBy("way_id")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("p"),
+             F.first("cls").alias("cls"))
+        .select(
+            F.col("way_id").alias("lu_id"),
+            "cls",
+            F.concat_ws(";", F.transform(
+                "p", lambda q: F.format_string("%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
+            F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
+            F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
+            F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
+            F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat"),
+        )
+    )
+
+
 def assign_landuse(faces: DataFrame, landuse: DataFrame) -> DataFrame:
     """faces(face_guid, ring, min_lon..max_lat) x landuse(lu_id, cls, ring,
     min_lon..max_lat) -> (face_guid, cls, pct) rows; pct = summed overlap

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,39 +87,6 @@ def pip_udf(ring: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
         rx, ry = pts[:-1, 0], pts[:-1, 1]  # drop closing dup
         out[idx] = kernels.points_in_polygon(pxv[idx], pyv[idx], rx, ry)
     return pd.Series(out)
-
-
-def candidate_join(points: DataFrame, polygons: DataFrame) -> DataFrame:
-    """Cell-grid candidate join + bbox prefilter + exact PIP refine.
-
-    Returns one row per (point, containing polygon).
-    """
-    index = explode_polygon_cells(polygons)
-    cand = (
-        points.join(F.broadcast(index), "cell_id")
-        # JVM-side bbox prefilter before the Arrow-batch exact test
-        .filter(
-            (F.col("lon") >= F.col("min_lon")) & (F.col("lon") <= F.col("max_lon"))
-            & (F.col("lat") >= F.col("min_lat")) & (F.col("lat") <= F.col("max_lat"))
-        )
-    )
-    return cand.filter(pip_udf(F.col("ring"), F.col("lon"), F.col("lat")))
-
-
-def assign_points(points: DataFrame, polygons: DataFrame) -> DataFrame:
-    """Deterministic assignment: each point takes the lexicographically
-    smallest containing polygon_guid (stable under any partitioning —
-    the exact-match invariant).
-
-    Output: (doc_id, span_idx, lon, lat, cell_id, polygon_guid, method)
-    for matched points only; orphans are handled by the kNN snap.
-    """
-    hits = candidate_join(points, polygons)
-    return (
-        hits.groupBy("doc_id", "span_idx", "cell_id", "lon", "lat")
-        .agg(F.min("polygon_guid").alias("polygon_guid"))
-        .withColumn("method", F.lit("pip"))
-    )
 
 
 def assign_documents(documents: DataFrame, polygons: DataFrame,
