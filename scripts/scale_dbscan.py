@@ -39,9 +39,9 @@ from urbanistic_polygons_spark.catalog.clustering import (  # noqa: E402
 from urbanistic_polygons_spark.operators.dbscan import (  # noqa: E402
     dbscan, eps_neighbor_pairs)
 from urbanistic_polygons_spark.session import get_spark  # noqa: E402
+from scripts.scale_stress import DST as SF10, build_sf1  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
-SF10 = str(_REPO / ".scale" / "sf1.0")
 
 
 def const_density_pts(spark, n, area_mult):
@@ -66,6 +66,7 @@ def main():
     out = {}
 
     # regime 1: fixed region, 10x density — counts only
+    build_sf1(spark)
     for label, sf in (("sf0.1", SF01), ("sf1.0", SF10)):
         pts = _pts_df(spark, sf)
         n = pts.count()

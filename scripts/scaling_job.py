@@ -49,13 +49,12 @@ def build_points(spark, n: int, cores: int, nonce: int = 0):
 
     Partitions = cores * 2: the Python-runner protocol costs ~180 ms of
     thread time PER mapInPandas task on this host (measured with a
-    trivial passthrough kernel, scripts/probe_fixed.py — not worker
-    startup, workers are reused; not the kernel body), so task count is
-    the fixed-cost knob.  cores*2 halves that overhead vs the original
-    cores*4 while keeping two waves per level so a transient burst on
-    one thread can still be absorbed by work stealing (tasks are
-    deterministic-uniform, so one wave would be tail-free only on a
-    noiseless host)."""
+    trivial passthrough kernel in r4 — not worker startup, workers are
+    reused; not the kernel body), so task count is the fixed-cost knob.
+    cores*2 halves that overhead vs the original cores*4 while keeping
+    two waves per level so a transient burst on one thread can still be
+    absorbed by work stealing (tasks are deterministic-uniform, so one
+    wave would be tail-free only on a noiseless host)."""
     r = spark.range(1 + nonce, n + 1 + nonce, 1, numPartitions=cores * 2)
     px = (F.col("id") * 7919) % 1890000
     py = (F.col("id") * 7907 + F.col("id") * 13) % 1520000

@@ -1,4 +1,4 @@
-"""cut_lineage (operators/dedup.py): the localCheckpoint variant that
+"""cut_lineage (plans/lineage.py): the localCheckpoint variant that
 drops the checkpoint's inherited `originStats`.
 
 Why it exists (r5 scale-stress find): Spark 4's localCheckpoint keeps
@@ -15,9 +15,9 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
-from urbanistic_polygons_spark.operators import dedup
-from urbanistic_polygons_spark.operators.dedup import (
-    cut_lineage, near_dup_components)
+from urbanistic_polygons_spark.operators.dedup import near_dup_components
+from urbanistic_polygons_spark.plans import lineage
+from urbanistic_polygons_spark.plans.lineage import cut_lineage
 
 
 def _size_in_bytes(df) -> int:
@@ -45,8 +45,8 @@ def test_cut_lineage_strips_inherited_stats(spark, monkeypatch):
     def broken(*args, **kwargs):
         raise RuntimeError("simulated internal API drift")
 
-    monkeypatch.setattr(dedup, "DataFrame", broken)
-    monkeypatch.setattr(dedup, "_cut_lineage_warned", False)
+    monkeypatch.setattr(lineage, "DataFrame", broken)
+    monkeypatch.setattr(lineage, "_cut_lineage_warned", False)
     with pytest.warns(RuntimeWarning, match="cut_lineage could not strip"):
         fallback = cut_lineage(g)
     assert sorted(r["node"] for r in fallback.collect()) == list(range(100))
@@ -75,6 +75,7 @@ def test_cut_lineage_bounds_selfjoin_stat_growth(spark):
     assert labels.count() == 50
 
 
+@pytest.mark.filterwarnings("error:near_dup_components stopped")
 def test_components_on_long_chain_converges(spark):
     """A 300-node path graph forces many propagation rounds — the shape
     that hit the stats blowup before the fix; exact answer asserted."""

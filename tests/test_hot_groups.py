@@ -2,6 +2,7 @@
 n-times-duplicated document must not produce an O(m^2) pair explosion —
 oversized groups are dropped, and the drop is observable (never silent)."""
 
+import pytest
 from pyspark.sql import Observation
 
 from urbanistic_polygons_spark.operators.dedup import (
@@ -83,6 +84,8 @@ def test_embedding_near_dup_pairs_found(spark):
 
 
 def test_near_dup_components(spark):
+    from pyspark.sql import functions as F
+
     from urbanistic_polygons_spark.operators.dedup import near_dup_components
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4),          # chain 1-2-3-4
@@ -94,6 +97,55 @@ def test_near_dup_components(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1),
                    (10, 10), (11, 10),
                    (20, 20), (21, 20), (22, 20)}
+
+    # string ids (the face-GUID shape merge uses): same min-id semantics
+    # under string order, over a cycle, a triangle and a pair
+    raw = [(0, 1), (1, 2), (2, 3), (3, 0),
+           (10, 11), (11, 12), (10, 12),
+           (20, 21)]
+    spairs = spark.createDataFrame(raw, "doc_a long, doc_b long").select(
+        F.format_string("n%02d", "doc_a").alias("doc_a"),
+        F.format_string("n%02d", "doc_b").alias("doc_b"))
+    got_s = {(r.doc_id, r.component)
+             for r in near_dup_components(spairs).collect()}
+    assert got_s == {("n00", "n00"), ("n01", "n00"), ("n02", "n00"),
+                     ("n03", "n00"),
+                     ("n10", "n10"), ("n11", "n10"), ("n12", "n10"),
+                     ("n20", "n20"), ("n21", "n20")}
+
+    # no pairs: no components, and the loop exits on its first round
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert near_dup_components(empty).count() == 0
+
+
+def test_near_dup_components_huge_ids(spark):
+    """Ids at or above 2^62 (hashed 64-bit doc ids): the labels of five
+    such nodes already sum past int64, so the loop must not aggregate
+    them arithmetically."""
+    from urbanistic_polygons_spark.operators.dedup import near_dup_components
+    base = 1 << 62
+    pairs = spark.createDataFrame(
+        [(base + 4, base + 3), (base + 3, base + 2),   # chain
+         (base + 1, base)],                            # pair
+        "doc_a long, doc_b long")
+    got = {(r.doc_id, r.component)
+           for r in near_dup_components(pairs).collect()}
+    assert got == {(base + 2, base + 2), (base + 3, base + 2),
+                   (base + 4, base + 2),
+                   (base, base), (base + 1, base)}
+
+
+def test_near_dup_components_round_cap_warns(spark):
+    """A 300-node chain cannot converge in 2 rounds: hitting the cap must
+    warn instead of silently returning non-minimal labels."""
+    from pyspark.sql import functions as F
+
+    from urbanistic_polygons_spark.operators.dedup import near_dup_components
+    pairs = spark.range(299).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+    with pytest.warns(RuntimeWarning, match="max_rounds=2"):
+        out = near_dup_components(pairs, max_rounds=2)
+    assert out.filter(F.col("component") != 0).count() > 0
 
 
 def test_winnow_fingerprints_semantics(spark):
@@ -120,47 +172,19 @@ def test_winnow_fingerprints_semantics(spark):
     assert len(fps[4]) == 1          # < k tokens -> single-hash fallback
 
 
-def test_star_contraction_long_chain(spark):
+@pytest.mark.filterwarnings("error:near_dup_components stopped")
+def test_near_dup_components_long_chain(spark):
     """r3 verdict item 10: a 10^4-node chain (diameter 10^4 — the
-    propagate loop's worst case) converges under algorithm='star' within
-    16 alternations (O(log^2 n)) to the single component labeled by the
-    minimum node id."""
+    propagate loop's worst case) converges within 16 rounds to the single
+    component labeled by the minimum node id, without hitting the round
+    cap."""
     from pyspark.sql import functions as F
 
     from urbanistic_polygons_spark.operators.dedup import near_dup_components
 
     pairs = spark.range(9999).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-    out = near_dup_components(pairs, max_rounds=16,
-                              algorithm="star").toPandas()
+    out = near_dup_components(pairs, max_rounds=16).toPandas()
     assert len(out) == 10000
     assert set(out.doc_id) == set(range(10000))
     assert (out.component == 0).all()
-
-
-def test_star_contraction_matches_propagate(spark):
-    """Star and propagate agree exactly (same min-id component semantics)
-    on a multi-component graph with chains, cliques and singetons-by-merge,
-    for numeric AND string ids."""
-    from pyspark.sql import functions as F
-
-    from urbanistic_polygons_spark.operators.dedup import near_dup_components
-
-    raw = [(0, 1), (1, 2), (2, 3),          # chain -> comp 0
-           (10, 11), (11, 12), (10, 12),    # triangle -> comp 10
-           (20, 21),                        # pair -> comp 20
-           (3, 0)]                          # cycle back
-    pairs = spark.createDataFrame(raw, "doc_a long, doc_b long")
-    star = {(r.doc_id, r.component)
-            for r in near_dup_components(pairs, algorithm="star").collect()}
-    prop = {(r.doc_id, r.component)
-            for r in near_dup_components(pairs).collect()}
-    assert star == prop
-
-    spairs = pairs.select(F.concat(F.lit("n"), F.format_string("%02d", "doc_a")).alias("doc_a"),
-                          F.concat(F.lit("n"), F.format_string("%02d", "doc_b")).alias("doc_b"))
-    star_s = {(r.doc_id, r.component)
-              for r in near_dup_components(spairs, algorithm="star").collect()}
-    prop_s = {(r.doc_id, r.component)
-              for r in near_dup_components(spairs).collect()}
-    assert star_s == prop_s

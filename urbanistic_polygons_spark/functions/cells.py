@@ -126,14 +126,3 @@ def neighbor_cells_ringed(cell: Column, max_ring: int = 3,
                 (ny * F.lit(n) + nx).alias("cell"),
                 F.lit(max(abs(dx), abs(dy))).alias("ring")))
     return F.array(*entries)
-
-
-def salted_prefix(cell: Column, key: Column, n_salts: int = 8,
-                  prefix_bits: int = 8) -> Column:
-    """Skew-defeating partition key: high bits of the cell id (spatial
-    prefix, keeps locality) + a hash salt so one hot urban-core cell spreads
-    over ``n_salts`` shuffle partitions (north_rule: salted repartitioning
-    on cell prefixes)."""
-    prefix = F.shiftright(cell, prefix_bits)
-    salt = F.pmod(F.hash(key), F.lit(n_salts))
-    return (prefix * F.lit(n_salts) + salt).alias("salted_prefix")

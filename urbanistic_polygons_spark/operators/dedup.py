@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
+from ..plans.lineage import cut_lineage, ensure_metrics_survive
 
 # deterministic (a, b) parameters for the k minhash permutations
 # h_j(x) = (a_j * x + b_j) mod p, p = 2^31 - 1; a_j < 2^31 so the product
@@ -43,81 +44,6 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
         b = state % MINHASH_P
         params.append((a, b))
     return params
-
-
-def ensure_metrics_survive(df: DataFrame) -> None:
-    """Keep drop counters reliable: AQE's empty-relation propagation prunes
-    CollectMetrics nodes when a downstream shuffle stage turns out empty at
-    runtime (measured on Spark 4.1 — ``Observation.get`` hangs with an empty
-    row), i.e. the lineage counters would vanish exactly when EVERY group
-    was dropped.  Excluding the rule only disables an empty-input
-    short-circuit; applied to the session only when a caller attaches an
-    observation."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.optimizer.excludedRules"
-    rule = ("org.apache.spark.sql.execution.adaptive."
-            "AQEPropagateEmptyRelation")
-    try:
-        cur = spark.conf.get(key)
-    except Exception:
-        cur = None
-    if not cur:
-        spark.conf.set(key, rule)
-    elif rule not in cur:
-        spark.conf.set(key, cur + "," + rule)
-
-
-_cut_lineage_warned = False
-
-
-def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` + drop the checkpoint's inherited size estimate
-    — the lineage cut an ITERATIVE SELF-JOINING loop must use.
-
-    Spark 4's ``localCheckpoint`` cuts the logical plan but keeps
-    ``originStats`` = the origin plan's ESTIMATED statistics, and the
-    size-only stats visitor estimates a join as the PRODUCT of its
-    children's ``sizeInBytes``.  A loop whose round self-joins the
-    previous round's checkpoint therefore SQUARES the inherited estimate
-    every round — the digit count of the BigInt doubles per round, and
-    by round ~16 "computing the estimate" means multiplying
-    million-digit integers: the driver burns minutes of single-thread
-    CPU inside ``BigInteger.multiply`` (Karatsuba/ToomCook3 frames under
-    ``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` — observed live on a
-    500k-edge ``near_dup_components`` call that never finished; jstack
-    evidence in BENCH.md r5).  At small scale the loop converges before
-    the doubling matters, which is why this only surfaced at the 10x
-    scale-stress — a textbook invisible-at-test-scale scale-killer.
-
-    Dropping ``originStats`` resets the checkpoint leaf to
-    ``defaultSizeInBytes``; every join these loops run is
-    corpus-proportional on both sides (never a broadcast candidate), so
-    the reset costs nothing in plan quality.  Uses the classic-Dataset
-    internals via py4j; any drift in that internal API degrades to a
-    plain (un-stripped) checkpoint and warns once per process."""
-    ck = df.localCheckpoint(eager=eager)
-    try:
-        spark = df.sparkSession
-        jdf = ck._jdf
-        lr = jdf.queryExecution().analyzed()
-        jvm = spark._jvm
-        none = jvm.scala.Option.empty()
-        stripped = lr.copy(lr.output(), lr.rdd(), lr.outputPartitioning(),
-                           lr.outputOrdering(), lr.isStreaming(),
-                           lr.stream(), jdf.sparkSession(), none, none)
-        jnew = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            jdf.sparkSession(), stripped)
-        return DataFrame(jnew, spark)
-    except Exception as exc:
-        global _cut_lineage_warned
-        if not _cut_lineage_warned:
-            _cut_lineage_warned = True
-            warnings.warn(
-                f"cut_lineage could not strip the checkpoint's inherited "
-                f"statistics ({exc!r}); falling back to a plain "
-                f"localCheckpoint, so self-joining loops may square their "
-                f"size estimate every round", RuntimeWarning, stacklevel=2)
-        return ck
 
 
 def normalize(text_col):
@@ -154,12 +80,6 @@ def shingles_of_tokens(toks, n: int = 3):
             idx, lambda i: F.concat_ws(
                 " ", toks[i], toks[i + F.lit(1)], toks[i + F.lit(2)])))
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def shingles(text_col, n: int = 3):
-    """Kept for API compatibility — prefer tokenizing in a separate
-    projection and calling :func:`shingles_of_tokens` (see its perf note)."""
-    return shingles_of_tokens(X.tokens(text_col), n)
 
 
 def _exploded_shingles(docs: DataFrame, id_col: str, text_col: str,
@@ -243,150 +163,45 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     return pairs.select(F.col("p.doc_a"), F.col("p.doc_b")).distinct()
 
 
-def _star_contraction(sym: DataFrame, max_rounds: int) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", Algorithm 2): the
-    O(log^2 n)-round path for HIGH-DIAMETER graphs.  Unlike label
-    propagation — which joins the full, never-shrinking edge set every
-    round — each alternation rewrites the edge set itself toward disjoint
-    stars, so the per-round shuffle volume contracts with the graph.
-
-    ``sym``: symmetric distinct (src, dst) edges, no self-loops.
-    Returns (node, component) with component = min node of the component.
-    """
-    # canonical form: every undirected edge once, directed larger->smaller
-    edges = (sym.filter(F.col("src") > F.col("dst"))
-             .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-             .distinct().localCheckpoint(eager=True))
-    for _ in range(max_rounds):
-        if edges.isEmpty():
-            break
-        # large-star(u): connect every strictly-larger neighbor to
-        # min(Gamma(u) + {u}); output stays larger->smaller canonical
-        full = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = full.groupBy("u").agg(
-            F.least(F.first("u"), F.min("v")).alias("m"))
-        large = (full.join(mins, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct())
-        large = cut_lineage(large, eager=False)
-        # small-star(u): connect u and all its smaller neighbors to the
-        # minimum among them (input/output both larger->smaller)
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        both = (large.join(mins2, "u")
-                .select(F.explode_outer(F.array(
-                    F.struct(F.col("u").alias("x"), F.col("m").alias("y")),
-                    F.struct(F.col("v").alias("x"), F.col("m").alias("y"))))
-                    .alias("e"))
-                .select(F.col("e.x").alias("u"), F.col("e.y").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct())
-        both = cut_lineage(both)
-        # fixpoint = edge set unchanged (both sets are canonical, so the
-        # two-sided anti-join is exact); counts first for the cheap exit
-        if (both.count() == edges.count()
-                and both.join(edges, ["u", "v"], "left_anti").isEmpty()):
-            edges = both
-            break
-        edges = both
-    # at the fixpoint the edge set is disjoint stars centered on the
-    # component minimum: non-roots are the u side, roots appear only as v
-    roots = (edges.select("v").distinct()
-             .join(edges.select(F.col("u").alias("v")).distinct(),
-                   "v", "left_anti"))
-    return (edges.select(F.col("u").alias("node"),
-                         F.col("v").alias("component"))
-            .unionByName(roots.select(F.col("v").alias("node"),
-                                      F.col("v").alias("component"))))
-
-
 def near_dup_components(pairs: DataFrame, id_a: str = "doc_a",
                         id_b: str = "doc_b",
-                        max_rounds: int = 24,
-                        algorithm: str = "propagate") -> DataFrame:
+                        max_rounds: int = 24) -> DataFrame:
     """Connected components over the near-dup candidate graph: the step
     that turns pair lists (LSH / Jaccard / embedding) into actual dedup
     groups.  Output: (doc_id, component) for every endpoint, where
     ``component`` is the smallest doc_id reachable — so the keeper of a
-    group IS its component id.
+    group IS its component id.  Ids may be of any orderable type (long
+    doc ids, string ids, face GUIDs).
 
     Min-label propagation to fixpoint: each round every node takes the min
     of its own label and its neighbors' labels (one message join + one
     min-aggregation, both shuffle-on-node-key; lineage cut per round).
     Rounds needed = component diameter shrunk geometrically by the
-    pointer jump — near-dup clusters are tiny and dense, so a handful;
-    the ``max_rounds`` cap plus an explicit convergence check (no label
-    changed) bounds the loop.
-
-    ``algorithm="star"`` switches to the alternating large-star/
-    small-star contraction (:func:`_star_contraction`) — the right tool
-    for HIGH-DIAMETER graphs (long chains, road networks): it converges
-    in O(log^2 n) alternations AND its per-round shuffle volume shrinks
-    with the contracting edge set, where propagation re-joins the full
-    edge set every round.  Default stays "propagate": dedup graphs are
-    low-diameter and the propagate loop is one join cheaper per round.
+    pointer jump — near-dup clusters are tiny and dense, so a handful.
+    The loop stops when a round changes no label, checked exactly for
+    every id type by a node-keyed join of consecutive rounds (early-out
+    ``isEmpty``; nothing sums the ids).  Reaching ``max_rounds`` first
+    leaves some labels above their component minimum and raises a
+    ``RuntimeWarning``.
     """
     sym = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
            .unionByName(pairs.select(F.col(id_b).alias("src"),
                                      F.col(id_a).alias("dst")))
            .distinct()
            .localCheckpoint(eager=False))
-    if algorithm == "star":
-        return _star_contraction(sym, max_rounds).select(
-            F.col("node").alias("doc_id"), "component")
     # initialization IS the first propagation round: label(v) = min(v,
     # min neighbor) in the same shuffle that deduplicates nodes — one
     # groupBy replaces distinct-nodes + a full first loop round
     labels = (sym.groupBy(F.col("src").alias("node"))
               .agg(F.least(F.first("src"), F.min("dst")).alias("component"))
               .localCheckpoint(eager=True))
-    # convergence scalar: labels are monotonically non-increasing per
-    # node, so for NUMERIC ids the label SUM strictly decreases until
-    # fixpoint — one cheap aggregation.  Non-numeric ids (string doc ids,
-    # face GUIDs from operators/merge.py) have no such scalar; use an
-    # exact changed-row probe instead (node-keyed join of consecutive
-    # rounds — co-partitioned, early-out isEmpty).  The exact probe also
-    # sidesteps the float-precision ceiling a double SUM of 10^12 ids
-    # would hit (2^53); at that scale prefer string ids or cast the sum
-    # to decimal.
-    from pyspark.sql.types import NumericType
-    numeric_ids = isinstance(labels.schema["component"].dataType, NumericType)
-
-    def _ckpt_observing_sum(df):
-        """Eager localCheckpoint whose materialization job ALSO fills a
-        sum(component) observation — the convergence scalar comes out of
-        the checkpoint action itself, halving the actions per round
-        (2 -> 1).  At sf0.1 the saved job only re-reads checkpointed rows
-        so the A/B is within noise (min-of-3: dedup_components 4.3-4.7s,
-        dbscan 6.5-7.2s, mixed signs); the win is the eliminated full
-        pass over the label frame per round, which grows linearly with
-        corpus size.  ensure_metrics_survive guards the AQE empty-relation
-        pruning that would otherwise hang Observation.get on an empty
-        label frame (first round of an empty pair set)."""
-        import uuid as _uuid
-        ensure_metrics_survive(df)
-        obs = Observation(f"cc_sum_{_uuid.uuid4().hex[:8]}")
-        out = cut_lineage(df.observe(obs, F.sum("component").alias("s")))
-        return out, obs.get["s"]
-
-    prev = labels
-    if numeric_ids:
-        # fold the initial scalar into the checkpoint already performed:
-        # re-observe on top of the materialized frame costs one tiny job
-        # over checkpointed rows (not a recompute of the groupBy)
-        prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    else:
-        prev_sum = None
     for _ in range(max_rounds):
         msgs = (sym.join(labels, sym.src == labels.node)
                 .select(F.col("dst").alias("node"), "component"))
         # lazy checkpoint so the jump's self-join reads ONE
         # materialization of the aggregate instead of recomputing it per
         # side (self-joins re-execute their subtree — repo rule)
-        labels = cut_lineage(
+        prop = cut_lineage(
             labels.unionByName(msgs)
                   .groupBy("node")
                   .agg(F.min("component").alias("component")),
@@ -395,25 +210,23 @@ def near_dup_components(pairs: DataFrame, id_a: str = "doc_a",
         # itself a node of the graph, so the lookup hits; one neighbor hop
         # + one jump per round shrinks chains geometrically (large-star
         # idea; measured on the sf0.1 LSH graph: 8 plain rounds -> 4)
-        ptr = labels.select(F.col("node").alias("p_node"),
-                            F.col("component").alias("p_comp"))
-        jumped = (labels.join(ptr, labels.component == ptr.p_node, "left")
-                  .select("node",
-                          F.coalesce("p_comp", "component")
-                          .alias("component")))
-        if numeric_ids:
-            labels, cur_sum = _ckpt_observing_sum(jumped)
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            labels = cut_lineage(jumped)
-            unchanged = (labels.join(
-                prev.select("node", F.col("component").alias("_prev")), "node")
-                .filter(F.col("component") != F.col("_prev")).isEmpty())
-            if unchanged:
-                break
-            prev = labels
+        ptr = prop.select(F.col("node").alias("p_node"),
+                          F.col("component").alias("p_comp"))
+        jumped = cut_lineage(
+            prop.join(ptr, prop.component == ptr.p_node, "left")
+                .select("node",
+                        F.coalesce("p_comp", "component").alias("component")))
+        changed = (jumped.join(
+            labels.select("node", F.col("component").alias("_prev")), "node")
+            .filter(F.col("component") != F.col("_prev")))
+        labels = jumped
+        if changed.isEmpty():
+            break
+    else:
+        warnings.warn(
+            f"near_dup_components stopped at max_rounds={max_rounds} "
+            f"before converging; some labels are not their component "
+            f"minimum", RuntimeWarning, stacklevel=2)
     return labels.select(F.col("node").alias("doc_id"), "component")
 
 

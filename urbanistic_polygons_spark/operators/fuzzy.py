@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import ensure_metrics_survive
+from ..plans.lineage import ensure_metrics_survive
 
 
 def edit_distance_pairs(docs: DataFrame, id_col: str = "doc_id",

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import cut_lineage, ensure_metrics_survive
+
 DAMP_NUM, DAMP_DEN = 85, 100          # damping 0.85 as an integer ratio
 PR_SCALE = 10 ** 12                   # rank fixed-point scale
 
@@ -179,7 +181,6 @@ def sssp_int(edges: DataFrame, source: int, src: str = "src",
     either way, but only non-negative weights converge to true SSSP).
     """
     from pyspark.sql import Observation
-    from .dedup import cut_lineage, ensure_metrics_survive
 
     ed = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
                        F.col(weight).cast("long").alias("w"))
@@ -212,7 +213,7 @@ def sssp_int(edges: DataFrame, source: int, src: str = "src",
         obs = Observation(f"sssp_{rnd}")
         # cut_lineage, not plain localCheckpoint: the full-outer merge
         # references dist AND cand(dist) — the inherited size estimate
-        # squares per round (see dedup.cut_lineage)
+        # squares per round (see plans.lineage.cut_lineage)
         merged = cut_lineage(
             merged.observe(obs, F.sum("improved").alias("n")))
         dist = merged.select("node", "dist")

@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import cut_lineage, near_dup_components
+from ..plans.lineage import cut_lineage
+from .dedup import near_dup_components
 
 #: segments whose boundary matches no classified barrier edge DO NOT
 #: merge: a missed segment-key join (filtered edge subset, or a
@@ -217,7 +218,7 @@ def merge_to_size(faces: DataFrame, seg_res: DataFrame,
                 F.col("doc_id").alias("region"), "component")
             # cut_lineage, not plain localCheckpoint: each level joins
             # labels against comp(labels) — the inherited size estimate
-            # squares per level (see dedup.cut_lineage)
+            # squares per level (see plans.lineage.cut_lineage)
             labels = cut_lineage(
                 labels.join(comp, "region", "left")
                       .select("face_guid",

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.lineage import ensure_metrics_survive
+
 QUANT_SCALE = 1000
 
 
@@ -521,7 +523,6 @@ def embedding_near_dup(embeddings: DataFrame, id_col: str = "vec_id",
                             F.col("q").alias("q")))).alias("ms"))
                .filter(F.size("ms") > 1))
     if observation is not None:
-        from .dedup import ensure_metrics_survive
         ensure_metrics_survive(grouped)
         grouped = grouped.observe(
             observation,

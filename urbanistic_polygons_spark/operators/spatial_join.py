@@ -10,8 +10,10 @@ Scale design:
   covering cell and broadcast — no shuffle of the 10^12-doc side for the
   candidate join (reference analog: the per-tile landuse polygon fetch,
   Landuse/LandusePolygons.cs:15-45);
-- the doc side is salted-repartitioned on cell prefix before any grouped
-  work so hot urban-core cells spread over many tasks (north_rule);
+- hot urban-core cells need no salting: the candidate join broadcasts
+  the index, so the doc side never shuffles on cell, and the per-point
+  aggregation is keyed on (doc_id, span_idx, ...), so a hot cell's
+  points hash across all shuffle partitions;
 - bbox prefilter runs JVM-side (whole-stage codegen) before the Arrow
   batch PIP refine (reference filter-refine,
   Landuse/TiledBarrierGraphExtensions.cs:45);

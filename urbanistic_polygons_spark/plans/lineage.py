@@ -22,6 +22,11 @@ Iceberg-style SNAPSHOT log over partitioned parquet:
 
 With Iceberg jars on the classpath the same API maps onto real Iceberg
 snapshot commits; this parquet implementation is the in-sandbox fallback.
+
+The in-memory counterparts live here too: ``cut_lineage`` is the
+per-round lineage cut every iterative loop uses, and
+``ensure_metrics_survive`` keeps ``df.observe`` counters alive on empty
+inputs.
 """
 
 from __future__ import annotations
@@ -30,10 +35,86 @@ import json
 import os
 import time
 import uuid
+import warnings
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def ensure_metrics_survive(df: DataFrame) -> None:
+    """Keep drop counters reliable: AQE's empty-relation propagation prunes
+    CollectMetrics nodes when a downstream shuffle stage turns out empty at
+    runtime (measured on Spark 4.1 — ``Observation.get`` hangs with an empty
+    row), i.e. the lineage counters would vanish exactly when EVERY group
+    was dropped.  Excluding the rule only disables an empty-input
+    short-circuit; applied to the session only when a caller attaches an
+    observation."""
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    rule = ("org.apache.spark.sql.execution.adaptive."
+            "AQEPropagateEmptyRelation")
+    try:
+        cur = spark.conf.get(key)
+    except Exception:
+        cur = None
+    if not cur:
+        spark.conf.set(key, rule)
+    elif rule not in cur:
+        spark.conf.set(key, cur + "," + rule)
+
+
+_cut_lineage_warned = False
+
+
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``localCheckpoint`` + drop the checkpoint's inherited size estimate
+    — the lineage cut an ITERATIVE SELF-JOINING loop must use.
+
+    Spark 4's ``localCheckpoint`` cuts the logical plan but keeps
+    ``originStats`` = the origin plan's ESTIMATED statistics, and the
+    size-only stats visitor estimates a join as the PRODUCT of its
+    children's ``sizeInBytes``.  A loop whose round self-joins the
+    previous round's checkpoint therefore SQUARES the inherited estimate
+    every round — the digit count of the BigInt doubles per round, and
+    by round ~16 "computing the estimate" means multiplying
+    million-digit integers: the driver burns minutes of single-thread
+    CPU inside ``BigInteger.multiply`` (Karatsuba/ToomCook3 frames under
+    ``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` — observed live on a
+    500k-edge ``near_dup_components`` call that never finished; jstack
+    evidence in BENCH.md r5).  At small scale the loop converges before
+    the doubling matters, which is why this only surfaced at the 10x
+    scale-stress — a textbook invisible-at-test-scale scale-killer.
+
+    Dropping ``originStats`` resets the checkpoint leaf to
+    ``defaultSizeInBytes``; every join these loops run is
+    corpus-proportional on both sides (never a broadcast candidate), so
+    the reset costs nothing in plan quality.  Uses the classic-Dataset
+    internals via py4j; any drift in that internal API degrades to a
+    plain (un-stripped) checkpoint and warns once per process."""
+    ck = df.localCheckpoint(eager=eager)
+    try:
+        spark = df.sparkSession
+        jdf = ck._jdf
+        lr = jdf.queryExecution().analyzed()
+        jvm = spark._jvm
+        none = jvm.scala.Option.empty()
+        stripped = lr.copy(lr.output(), lr.rdd(), lr.outputPartitioning(),
+                           lr.outputOrdering(), lr.isStreaming(),
+                           lr.stream(), jdf.sparkSession(), none, none)
+        jnew = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            jdf.sparkSession(), stripped)
+        return DataFrame(jnew, spark)
+    except Exception as exc:
+        global _cut_lineage_warned
+        if not _cut_lineage_warned:
+            _cut_lineage_warned = True
+            warnings.warn(
+                f"cut_lineage could not strip the checkpoint's inherited "
+                f"statistics ({exc!r}); falling back to a plain "
+                f"localCheckpoint, so self-joining loops may square their "
+                f"size estimate every round", RuntimeWarning, stacklevel=2)
+        return ck
 
 
 def _have_iceberg(spark: SparkSession) -> bool:
@@ -291,7 +372,6 @@ class LineageStore:
         # AQE's empty-relation pruning would drop the CollectMetrics node
         # exactly when todo is empty (Observation.get then hangs) — the
         # shared exclusion helper guards that.
-        from ..operators.dedup import ensure_metrics_survive
         ensure_metrics_survive(todo)
         obs = Observation(f"lineage_{stage}_{cid}_{uuid.uuid4().hex[:8]}")
         staged = (todo.withColumn("_commit", F.lit(cid))
