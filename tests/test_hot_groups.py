@@ -84,8 +84,6 @@ def test_embedding_near_dup_pairs_found(spark):
 
 
 def test_near_dup_components(spark):
-    from pyspark.sql import functions as F
-
     from urbanistic_polygons_spark.operators.dedup import near_dup_components
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4),          # chain 1-2-3-4
@@ -98,24 +96,29 @@ def test_near_dup_components(spark):
                    (10, 10), (11, 10),
                    (20, 20), (21, 20), (22, 20)}
 
-    # string ids (the face-GUID shape merge uses): same min-id semantics
-    # under string order, over a cycle, a triangle and a pair
+    # no pairs: no components, and the loop exits on its first round
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert near_dup_components(empty).count() == 0
+
+
+def test_near_dup_components_string_ids(spark):
+    """String ids (the face-GUID shape merge uses) get the same min-id
+    semantics under string order, over a cycle, a triangle and a pair."""
+    from pyspark.sql import functions as F
+
+    from urbanistic_polygons_spark.operators.dedup import near_dup_components
     raw = [(0, 1), (1, 2), (2, 3), (3, 0),
            (10, 11), (11, 12), (10, 12),
            (20, 21)]
     spairs = spark.createDataFrame(raw, "doc_a long, doc_b long").select(
         F.format_string("n%02d", "doc_a").alias("doc_a"),
         F.format_string("n%02d", "doc_b").alias("doc_b"))
-    got_s = {(r.doc_id, r.component)
-             for r in near_dup_components(spairs).collect()}
-    assert got_s == {("n00", "n00"), ("n01", "n00"), ("n02", "n00"),
-                     ("n03", "n00"),
-                     ("n10", "n10"), ("n11", "n10"), ("n12", "n10"),
-                     ("n20", "n20"), ("n21", "n20")}
-
-    # no pairs: no components, and the loop exits on its first round
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert near_dup_components(empty).count() == 0
+    got = {(r.doc_id, r.component)
+           for r in near_dup_components(spairs).collect()}
+    assert got == {("n00", "n00"), ("n01", "n00"), ("n02", "n00"),
+                   ("n03", "n00"),
+                   ("n10", "n10"), ("n11", "n10"), ("n12", "n10"),
+                   ("n20", "n20"), ("n21", "n20")}
 
 
 def test_near_dup_components_huge_ids(spark):
@@ -174,7 +177,7 @@ def test_winnow_fingerprints_semantics(spark):
 
 @pytest.mark.filterwarnings("error:near_dup_components stopped")
 def test_near_dup_components_long_chain(spark):
-    """r3 verdict item 10: a 10^4-node chain (diameter 10^4 — the
+    """A 10^4-node chain (diameter 10^4 — the
     propagate loop's worst case) converges within 16 rounds to the single
     component labeled by the minimum node id, without hitting the round
     cap."""
