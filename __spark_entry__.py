@@ -3,8 +3,8 @@
 ``entry(spark)`` runs the flagship pipeline (interleaved spans ->
 cell-index encode -> broadcast tiled polygon index -> PIP refine -> kNN
 orphan snap) on sf0.001.  ``queries()``/``oracle_sql()`` expose the full
-operator catalog (urbanistic_polygons_spark/catalog.py) with DuckDB oracle
-SQL for every SQL-expressible operator.
+operator catalog (the ``urbanistic_polygons_spark.catalog`` package) with
+DuckDB oracle SQL for every SQL-expressible operator.
 """
 
 from __future__ import annotations
@@ -26,39 +26,11 @@ def entry(spark: SparkSession) -> DataFrame:
     documents parquet, assign every geo span to a polygon via the broadcast
     tiled index + PIP + kNN snap, and return span-sequence-preserving
     assignments."""
-    from pyspark.sql import functions as F
-
     from urbanistic_polygons_spark import datagen
-    from urbanistic_polygons_spark.catalog import q_spans_spark
+    from urbanistic_polygons_spark.catalog.spans import flagship_documents
     from urbanistic_polygons_spark.operators.spatial_join import assign_documents
 
-    sf_dir = "/root/testdata/sf0.001"
-    # interleaved spans rows -> documents(doc_id, spans) in input_hint shape
-    spans = q_spans_spark(spark, sf_dir)
-    docs = (
-        spans
-        # geo spans carry micro-coords; convert to lon/lat for the engine
-        .withColumn("content", F.when(
-            F.col("kind") == "geo",
-            F.concat(
-                ((F.split("content", ",").getItem(0).cast("double") / 10000 + 8300)
-                 / 16384 * 360 - 180).cast("string"),
-                F.lit(","),
-                (F.lit(51.0) - F.split("content", ",").getItem(1).cast("double")
-                 / 10000 * 0.01).cast("string"))).otherwise(F.col("content")))
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("span_offset").alias("offset"),
-            F.col("kind").alias("kind"),
-            F.col("content").alias("text"),
-            F.col("media_ref").alias("media_ref")))).alias("raw"))
-        .select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.transform("raw", lambda s: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].cast("int").alias("offset"))).alias("spans"))
-    )
+    docs = flagship_documents(spark, "/root/testdata/sf0.001")
     polygons = datagen.polygons_df(spark, 300, seed=43)
     return assign_documents(docs, polygons)
 

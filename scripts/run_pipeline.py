@@ -28,7 +28,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from urbanistic_polygons_spark import datagen  # noqa: E402
-from urbanistic_polygons_spark.catalog import q_spans_spark  # noqa: E402
+from urbanistic_polygons_spark.catalog.spans import (  # noqa: E402
+    flagship_documents)
 from urbanistic_polygons_spark.operators.spatial_join import (  # noqa: E402
     assign_documents, extract_geo_points)
 from urbanistic_polygons_spark.plans.lineage import LineageStore  # noqa: E402
@@ -54,27 +55,7 @@ def main() -> None:
 
     # stage 1: ingest — interleaved spans -> geo points with cell ids,
     # partitioned by cell prefix (the salted-repartition key space)
-    spans = q_spans_spark(spark, sf_dir)
-    # geo spans carry integer micro-coords; convert to lon/lat for the
-    # engine (same mapping as __spark_entry__.entry)
-    spans = spans.withColumn("content", F.when(
-        F.col("kind") == "geo",
-        F.concat(
-            ((F.split("content", ",").getItem(0).cast("double") / 10000 + 8300)
-             / 16384 * 360 - 180).cast("string"),
-            F.lit(","),
-            (F.lit(51.0) - F.split("content", ",").getItem(1).cast("double")
-             / 10000 * 0.01).cast("string"))).otherwise(F.col("content")))
-    docs = (spans.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct(
-                F.col("span_offset").alias("offset"),
-                F.col("kind"), F.col("content").alias("text"),
-                F.col("media_ref")))).alias("raw"))
-            .select(F.col("doc_id").cast("string").alias("doc_id"),
-                    F.transform("raw", lambda s: F.struct(
-                        s["kind"].alias("kind"), s["text"].alias("text"),
-                        s["media_ref"].alias("media_ref"),
-                        s["offset"].cast("int").alias("offset"))).alias("spans")))
+    docs = flagship_documents(spark, sf_dir)
     pts = extract_geo_points(docs).withColumn(
         "cell_prefix", F.shiftright("cell_id", 8))
     pts = run_stage("ingest", pts, "cell_prefix")

@@ -2,10 +2,9 @@
 
 Pins: (1) zero false negatives — the prefilter output is always a
 superset of the true match set; (2) the exact refine removes every
-false positive in BOTH ship modes (literal array vs broadcast word
-join), which therefore agree row-for-row; (3) the prefilter actually
-prunes (the point of the operator); (4) the bitmap build shuffles at
-most m/64 rows regardless of key count.
+false positive, so the result equals the plain semi-join row-for-row;
+(3) the prefilter actually prunes (the point of the operator); (4) the
+bitmap build shuffles at most m/64 rows regardless of key count.
 """
 import pyspark.sql.functions as F
 import pytest
@@ -35,10 +34,8 @@ def test_modes_agree_and_match_exact_semi_join(sides):
     keys, probe = sides
     exact = probe.join(keys.dropDuplicates(), "key", "left_semi")
     lit = bloom_semi_join(probe, "key", keys, "key", m_bits=M, k=K)
-    jn = bloom_semi_join(probe, "key", keys, "key", m_bits=M, k=K,
-                         mode="join")
     want = _rows(exact)
-    assert want and _rows(lit) == want and _rows(jn) == want
+    assert want and _rows(lit) == want
 
 
 def test_zero_false_negatives_and_real_pruning(sides):
@@ -73,9 +70,3 @@ def test_contains_expression_agrees_with_python_model(spark):
                 .collect()}
     member = {r["key"] for r in keys.collect()}
     assert member <= got
-
-
-def test_unknown_mode_raises(sides):
-    keys, probe = sides
-    with pytest.raises(ValueError):
-        bloom_prefilter(probe, "key", keys, "key", mode="nope")

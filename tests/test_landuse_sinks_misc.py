@@ -632,6 +632,34 @@ def test_lineage_compact_updates_counters_and_expires_as_of(spark, tmp_path):
         LineageStore(str(tmp_path / "store")).read("s", as_of=0)
 
 
+def test_lineage_counters_follow_snapshot_log(spark, tmp_path, monkeypatch):
+    """The counters are the snapshot log's: a checkpoint killed right
+    after its snapshot record lands (every other file write fails) must
+    still report the rows of every committed snapshot."""
+    from urbanistic_polygons_spark.plans.lineage import LineageStore
+    store = LineageStore(str(tmp_path / "ckpt"))
+    df = spark.range(40).withColumn("part", F.col("id") % 4)
+    store.checkpoint(df.filter(F.col("part") < 2), "s", "part")
+
+    write = LineageStore._atomic_write
+
+    def log_only(path, payload):
+        if not path.name.startswith("_snapshots_"):
+            raise OSError(f"killed before writing {path.name}")
+        write(path, payload)
+
+    monkeypatch.setattr(LineageStore, "_atomic_write",
+                        staticmethod(log_only))
+    try:
+        store.checkpoint(df, "s", "part")
+    except OSError:
+        pass                       # the kill, if the commit writes more
+    snaps = store.snapshots("s")
+    assert [s["rows_added"] for s in snaps] == [20, 20]
+    assert store.counters("s")["n_rows"] == sum(
+        s["rows_added"] for s in snaps)
+
+
 def test_landuse_serve_mvt_layer(spark):
     """E3 raw-landuse serve (LanduseTileController.cs:85-126): the MVT
     blob carries a 'landuse' layer whose key table contains 'type' and

@@ -1,5 +1,5 @@
 """Query catalog: every driver-checkable operator as (Spark query, DuckDB
-oracle SQL) pairs — split into per-domain modules (r4 verdict item 5).
+oracle SQL) pairs, one module per domain.
 
 Determinism contract: every computed value in an oracle-checked query is
 either an integer, a string, or a float produced by the IDENTICAL IEEE
@@ -14,8 +14,9 @@ The real float lon/lat Mercator path is exercised by ``entry()`` and the
 pytest oracle suite; the catalog's micro-space queries verify the engine's
 join/agg/window/partitioning logic exactly.
 
-Layout (registration ORDER — the driver-report contract — lives solely
-in ``registry.build_catalog``):
+Layout (builders and oracle SQL live in the domain modules, the text
+builders' oracles in ``textsql``; the registration ORDER — the
+driver-report contract — lives solely in ``registry.build_catalog``):
 
 - ``_shared``    dialect shim, TABLES/register_views, micro-space CTEs
 - ``spatial``    PIP / bbox / knn / halo / pyramid / salted + HDR aggs
@@ -28,7 +29,7 @@ in ``registry.build_catalog``):
 - ``extras``     chunking / BPE stats / novelty / fuzzy / HLL / CMS / IDW
 - ``lakehouse``  CDC MERGE/upsert
 - ``clustering`` DBSCAN, SemDeDup
-- ``registry``   the ordered ``build_catalog()`` assembler
+- ``registry``   the one ordered (name, module builder, module oracle) list
 """
 
 from ._shared import TABLES, register_views  # noqa: F401

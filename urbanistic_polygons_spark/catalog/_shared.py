@@ -17,9 +17,7 @@ join/agg/window/partitioning logic exactly.
 
 from __future__ import annotations
 
-from functools import partial
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

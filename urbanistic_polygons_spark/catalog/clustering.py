@@ -1,13 +1,7 @@
-"""DBSCAN and SemDeDup clustering queries.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""DBSCAN and SemDeDup clustering queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._shared import _pts_df, register_views

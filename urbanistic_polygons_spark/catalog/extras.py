@@ -1,13 +1,7 @@
-"""Chunking, BPE pair stats, n-gram novelty, fuzzy dedup, HLL/CMS, IDW.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Chunking, BPE pair stats, n-gram novelty, fuzzy dedup, HLL/CMS, IDW."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._shared import PTS, _pts_df, register_views

@@ -1,13 +1,8 @@
-"""Face extraction / landuse / tile serve / merge pipeline queries.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Face extraction / landuse / tile serve / merge pipeline queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._shared import _pts_df

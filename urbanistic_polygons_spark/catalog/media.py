@@ -1,14 +1,6 @@
-"""Multimodal (binary media) query builders over the Arrow byte-parse CTE.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Multimodal (binary media) query builders over the Arrow byte-parse CTE."""
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
 
 from .spans import q_spans_spark
 

@@ -1,13 +1,8 @@
-"""Relational joins, packing/mixing/ordering, quality rules, graph algorithms, PII.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Relational joins, packing/mixing/ordering, quality rules, graph algorithms, PII."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._shared import PTS, _pts_df, register_views
@@ -509,9 +504,7 @@ def q_bloom_semi_join_spark(spark, sf_dir):
     false positives are removed by the refine join, so the result is
     exact regardless of m/k — the composition is what the oracle
     verifies.  At 100 TB: the probe side reaches the join carrying
-    |matches|*(1+fp) rows instead of the full table; if m outgrows a
-    plan literal, mode="join" broadcasts the word table instead
-    (pinned identical by tests/test_bloomjoin.py)."""
+    |matches|*(1+fp) rows instead of the full table."""
     from ..operators.bloomjoin import bloom_semi_join
     register_views(spark, sf_dir)
     keys = (spark.table("orders")
@@ -772,3 +765,94 @@ FROM aug
 """
 
 
+# ---------------------------------------------------------------------------
+# Pure-SQL entries: one dialect-shimmed template runs on both engines
+# (registered through ``_shared._sql_pair``).
+# ---------------------------------------------------------------------------
+
+# trajectory trip segmentation: gap + jump splits over per-user traces
+_TRIP_SEGMENTS_SQL = """
+WITH p AS (
+  SELECT user_id, event_id, ts,
+         (event_id * 2654435761) % 1048576 AS px,
+         (event_id * 2246822519) % 1048576 AS py
+  FROM events
+), o AS (
+  SELECT user_id, event_id, ts, px, py,
+         CASE WHEN LAG(ts) OVER w IS NULL
+                   OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
+                   OR ABS(px - LAG(px) OVER w)
+                      + ABS(py - LAG(py) OVER w) > 800000
+              THEN 1 ELSE 0 END AS new_t,
+         ABS(px - LAG(px) OVER w) + ABS(py - LAG(py) OVER w) AS step_l1
+  FROM p
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), t AS (
+  SELECT user_id, step_l1, new_t,
+         SUM(new_t) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS UNBOUNDED PRECEDING) AS trip_id
+  FROM o
+)
+SELECT user_id, CAST(trip_id AS BIGINT) AS trip_id,
+       COUNT(*) AS n_points,
+       CAST(SUM(CASE WHEN new_t = 0 THEN step_l1 ELSE 0 END) AS BIGINT)
+         AS path_l1
+FROM t GROUP BY user_id, trip_id"""
+
+_TOPK_PER_GROUP_SQL = """
+SELECT p_brand, p_partkey, price_cents, rk FROM (
+  SELECT p_brand, p_partkey,
+         CAST(ROUND(p_retailprice * 100) AS BIGINT) AS price_cents,
+         ROW_NUMBER() OVER (PARTITION BY p_brand
+                            ORDER BY p_retailprice DESC, p_partkey) AS rk
+  FROM part
+) WHERE rk <= 3"""
+
+_SESSIONIZE_SQL = """
+WITH o AS (
+  SELECT user_id, event_id, ts,
+         CASE WHEN LAG(ts) OVER w IS NULL
+                   OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), s AS (
+  SELECT user_id, event_id,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS UNBOUNDED PRECEDING) AS session_id
+  FROM o
+)
+SELECT user_id, COUNT(DISTINCT session_id) AS n_sessions,
+       COUNT(*) AS n_events
+FROM s GROUP BY user_id"""
+
+_DEDUP_KEEPER_SQL = """
+SELECT o_custkey, o_orderstatus, MIN(o_orderkey) AS keeper, COUNT(*) AS n
+FROM orders GROUP BY o_custkey, o_orderstatus"""
+
+_PIVOT_STATUS_SQL = """
+SELECT o_orderpriority,
+       CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_f,
+       CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_o,
+       CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_p
+FROM orders GROUP BY o_orderpriority"""
+
+_GLOBAL_TOPK_SQL = f"""
+WITH {PTS}
+SELECT point_id, px, py, weight_cents FROM pts
+ORDER BY weight_cents DESC, point_id
+LIMIT 100"""
+
+_Q1_PRICING_SQL = """
+SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
+       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+         AS sum_base_cents,
+       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+         AS BIGINT) AS sum_disc_cents
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus"""

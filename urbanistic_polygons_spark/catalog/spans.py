@@ -1,13 +1,8 @@
-"""Interleaved spans synthesis + reconstruction (the input_hint table shape).
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Interleaved spans synthesis + reconstruction (the input_hint table shape)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._shared import register_views
@@ -50,3 +45,27 @@ def q_spans_spark(spark, sf_dir):
     return text_spans.unionByName(img_spans).unionByName(geo_spans)
 
 
+def flagship_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship pipeline's documents(doc_id, spans) table in the
+    input_hint shape: ``q_spans_spark``'s rows with every geo span's
+    integer micro-coordinates rewritten to a lon/lat string, regrouped
+    per doc and ordered by span offset."""
+    x, y = (F.split("content", ",").getItem(i).cast("double")
+            for i in (0, 1))
+    spans = q_spans_spark(spark, sf_dir).withColumn("content", F.when(
+        F.col("kind") == "geo",
+        F.concat(((x / 10000 + 8300) / 16384 * 360 - 180).cast("string"),
+                 F.lit(","),
+                 (F.lit(51.0) - y / 10000 * 0.01).cast("string")))
+        .otherwise(F.col("content")))
+    return (spans.groupBy("doc_id")
+            .agg(F.array_sort(F.collect_list(F.struct(
+                F.col("span_offset").alias("offset"),
+                F.col("kind"), F.col("content").alias("text"),
+                F.col("media_ref")))).alias("raw"))
+            .select(F.col("doc_id").cast("string").alias("doc_id"),
+                    F.transform("raw", lambda s: F.struct(
+                        s["kind"].alias("kind"), s["text"].alias("text"),
+                        s["media_ref"].alias("media_ref"),
+                        s["offset"].cast("int").alias("offset")))
+                    .alias("spans")))

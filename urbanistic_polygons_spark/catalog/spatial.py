@@ -1,16 +1,13 @@
-"""Geospatial core over the integer micro space (PIP, bbox, knn, halo, pyramid, quantile/salt aggs).
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Geospatial core over the integer micro space (PIP, bbox, knn, halo, pyramid, quantile/salt aggs)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._shared import (
+    PIP_JOIN,
+    PTS,
     RECTS,
     _pip_hits,
     _pts_df,
@@ -29,6 +26,12 @@ def q_pip_assign_spark(spark, sf_dir):
     )
 
 
+_PIP_ASSIGN_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN}
+SELECT point_id, cell_id, MIN(poly_id) AS polygon_id
+FROM hits GROUP BY point_id, cell_id""", "duckdb")
+
+
 def q_bbox_join_spark(spark, sf_dir):
     return (
         _pip_hits(spark, sf_dir)
@@ -38,6 +41,13 @@ def q_bbox_join_spark(spark, sf_dir):
     )
 
 
+_BBOX_JOIN_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN}
+SELECT poly_id, COUNT(*) AS n_points,
+       CAST(SUM(weight_cents) AS BIGINT) AS sum_weight_cents
+FROM hits GROUP BY poly_id""", "duckdb")
+
+
 def q_landuse_agg_spark(spark, sf_dir):
     return (
         _pip_hits(spark, sf_dir)
@@ -45,6 +55,13 @@ def q_landuse_agg_spark(spark, sf_dir):
         .agg(F.sum("weight_cents").alias("sum_weight_cents"),
              F.count("*").alias("n_points"))
     )
+
+
+_LANDUSE_AGG_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN}
+SELECT cell_id, cls, CAST(SUM(weight_cents) AS BIGINT) AS sum_weight_cents,
+       COUNT(*) AS n_points
+FROM hits GROUP BY cell_id, cls""", "duckdb")
 
 
 def q_tile_assign_spark(spark, sf_dir):
@@ -61,6 +78,15 @@ def q_tile_assign_spark(spark, sf_dir):
                        (-F.col("b.negn")).alias("n"))
 
 
+_TILE_ASSIGN_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN},
+c AS (SELECT cell_id, cls, COUNT(*) AS n FROM hits GROUP BY 1, 2)
+SELECT cell_id, cls AS dominant_cls, n FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY cell_id ORDER BY n DESC, cls) AS rn
+  FROM c
+) WHERE rn = 1""", "duckdb")
+
+
 def q_bbox_agg_spark(spark, sf_dir):
     return (
         _pip_hits(spark, sf_dir)
@@ -69,6 +95,13 @@ def q_bbox_agg_spark(spark, sf_dir):
              F.min("py").alias("min_py"), F.max("py").alias("max_py"),
              F.count("*").alias("n_points"))
     )
+
+
+_BBOX_AGG_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN}
+SELECT poly_id, MIN(px) AS min_px, MAX(px) AS max_px,
+       MIN(py) AS min_py, MAX(py) AS max_py, COUNT(*) AS n_points
+FROM hits GROUP BY poly_id""", "duckdb")
 
 
 def q_landuse_rollup_spark(spark, sf_dir):
@@ -88,6 +121,16 @@ def q_landuse_rollup_spark(spark, sf_dir):
             F.coalesce(F.col("cell_y").cast("string"),
                        F.lit("<all>")).alias("row_band"),
             "n_points", "sum_weight_cents"))
+
+
+_LANDUSE_ROLLUP_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN}
+SELECT COALESCE(cls, '<all>') AS cls,
+       COALESCE(CAST(cell_y AS STRING), '<all>') AS row_band,
+       COUNT(*) AS n_points,
+       CAST(SUM(weight_cents) AS BIGINT) AS sum_weight_cents
+FROM (SELECT cls, cell_id {{D}} 16384 AS cell_y, weight_cents FROM hits)
+GROUP BY GROUPING SETS ((cls, cell_y), (cls), ())""", "duckdb")
 
 
 def q_knn_snap_spark(spark, sf_dir):
@@ -151,6 +194,31 @@ def q_knn_snap_spark(spark, sf_dir):
                     F.col("b.p").alias("polygon_id"),
                     F.col("b.ring").alias("ring"),
                     F.col("b.d2").alias("d2")))
+
+
+_KNN_SNAP_SQL = _render(f"""
+WITH {PTS}, {RECTS}, {PIP_JOIN},
+orph AS (
+  SELECT * FROM pts_cell
+  WHERE point_id NOT IN (SELECT point_id FROM hits)
+), r2 AS (
+  SELECT *, x0 {{D}} 10000 + 8300 AS rcx0, x1 {{D}} 10000 + 8300 AS rcx1,
+         y0 {{D}} 10000 + 5447 AS rcy0, y1 {{D}} 10000 + 5447 AS rcy1,
+         (x0 + x1) {{D}} 2 AS cx, (y0 + y1) {{D}} 2 AS cy
+  FROM rects
+), scored AS (
+  SELECT o.point_id, o.cell_id, r2.poly_id,
+         GREATEST(GREATEST(0, rcx0 - o.cell_x, o.cell_x - rcx1),
+                  GREATEST(0, rcy0 - o.cell_y, o.cell_y - rcy1)) AS ring,
+         (o.px - cx) * (o.px - cx) + (o.py - cy) * (o.py - cy) AS d2
+  FROM orph o CROSS JOIN r2
+), ranked AS (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY point_id
+                               ORDER BY ring, d2, poly_id) AS rn
+  FROM scored WHERE ring <= 3
+)
+SELECT point_id, cell_id, poly_id AS polygon_id, ring, d2
+FROM ranked WHERE rn = 1""", "duckdb")
 
 
 def q_overlap_area_spark(spark, sf_dir):
@@ -456,13 +524,20 @@ def q_cell_halo_spark(spark, sf_dir):
             .groupBy("cell_id").agg(F.sum("n_nbr").alias("halo_points")))
 
 
+_CELL_HALO_SQL = _render(f"""
+WITH {PTS},
+c AS (SELECT cell_x, cell_y, cell_id, COUNT(*) AS n
+      FROM pts_cell GROUP BY 1, 2, 3)
+SELECT a.cell_id, CAST(SUM(b.n) AS BIGINT) AS halo_points
+FROM c a JOIN c b
+  ON ABS(a.cell_x - b.cell_x) <= 1 AND ABS(a.cell_y - b.cell_y) <= 1
+GROUP BY a.cell_id""", "duckdb")
 
 
 def q_morans_i_spark(spark, sf_dir):
-    """Global Moran's I over the cell grid — Spark side of the r5-rotated
-    `morans_i` entry.
+    """Global Moran's I over the cell grid.
 
-    The shared SQL template expresses queen contiguity as
+    The oracle SQL expresses queen contiguity as
     ``ABS(a.cell_x-b.cell_x)<=1 AND ABS(a.cell_y-b.cell_y)<=1`` — fine
     for DuckDB's tiny oracle run, but Spark plans that theta self-join
     as a BroadcastNestedLoop (cell x cell — the 100 TB killer; caught by
@@ -505,3 +580,67 @@ def q_morans_i_spark(spark, sf_dir):
             .select(F.lit(n).cast("long").alias("n_cells"),
                     "w_pairs", "moran_num",
                     F.lit(den).cast("long").alias("moran_den")))
+
+
+# The consumer forms I = (N * num) / (W * den): no negative integer
+# division (truncate-vs-floor dialect skew) happens inside the query.
+_MORANS_I_SQL = _render("""
+WITH {PTS_BODY},
+c AS (
+  SELECT cell_x, cell_y, COUNT(*) AS x
+  FROM pts_cell GROUP BY cell_x, cell_y
+), tot AS (
+  SELECT COUNT(*) AS n, SUM(x) AS s FROM c
+), d AS (
+  SELECT cell_x, cell_y,
+         x * (SELECT n FROM tot) - (SELECT s FROM tot) AS di
+  FROM c
+), nb AS (
+  SELECT a.di AS da, b.di AS db
+  FROM d a JOIN d b
+    ON ABS(a.cell_x - b.cell_x) <= 1 AND ABS(a.cell_y - b.cell_y) <= 1
+   AND NOT (a.cell_x = b.cell_x AND a.cell_y = b.cell_y)
+)
+SELECT (SELECT CAST(n AS BIGINT) FROM tot) AS n_cells,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM nb) AS w_pairs,
+       (SELECT CAST(SUM(da * db) AS BIGINT) FROM nb) AS moran_num,
+       (SELECT CAST(SUM(di * di) AS BIGINT) FROM d) AS moran_den
+""".replace("{PTS_BODY}", PTS), "duckdb")
+
+
+# ---------------------------------------------------------------------------
+# Pure-SQL entries: one dialect-shimmed template runs on both engines
+# (registered through ``_shared._sql_pair``).
+# ---------------------------------------------------------------------------
+
+_RASTER_VECTORIZE_SQL = f"""
+WITH {PTS},
+g AS (
+  SELECT px {{D}} 100000 AS gx, py {{D}} 100000 AS gy, COUNT(*) AS n
+  FROM pts_cell GROUP BY 1, 2
+), f AS (
+  SELECT * FROM g WHERE n >= 3
+), m AS (
+  SELECT *, gx - ROW_NUMBER() OVER (PARTITION BY gy ORDER BY gx) AS grp
+  FROM f
+)
+SELECT gy, MIN(gx) AS x_start, MAX(gx) AS x_end,
+       CAST(SUM(n) AS BIGINT) AS n_points
+FROM m GROUP BY gy, grp"""
+
+_CELL_INDEX_SQL = f"""
+WITH {PTS}
+SELECT cell_id, COUNT(*) AS n_points, MIN(px) AS min_px, MAX(px) AS max_px,
+       CAST(SUM(weight_cents) AS BIGINT) AS sum_weight_cents
+FROM pts_cell GROUP BY cell_id"""
+
+_SALTED_PREFIX_SQL = f"""
+WITH {PTS}
+SELECT (cell_id {{D}} 256) * 8 + point_id % 8 AS salted_key, COUNT(*) AS n
+FROM pts_cell GROUP BY 1"""
+
+_DENSITY_RASTER_SQL = f"""
+WITH {PTS}
+SELECT cell_id, (px % 10000) {{D}} 625 AS gx, (py % 10000) {{D}} 625 AS gy,
+       COUNT(*) AS n
+FROM pts_cell GROUP BY 1, 2, 3"""

@@ -1,13 +1,8 @@
-"""Text fingerprinting, set-similarity and embedding ANN query builders.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""Text fingerprinting, set-similarity and embedding ANN query builders."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._shared import register_views

@@ -1,13 +1,7 @@
-"""DuckDB oracle SQL for the module-backed text/dedup/similarity queries + sampling/sketch/hull extras.
-
-Split from the monolithic catalog module (r4 verdict item 5).  Query
-REGISTRATION ORDER — the driver-report contract — lives solely in
-``registry.build_catalog``; this module only defines builders/SQL.
-"""
+"""DuckDB oracle SQL for the module-backed text/dedup/similarity queries + sampling/sketch/hull extras."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._shared import PTS, _pts_df, register_views

@@ -21,14 +21,8 @@ the filter is built from public primitives, all JVM-side:
    masks — a shuffle of at most m/64 rows;
 3. ship: collect the (word_idx -> word) map ONCE (scalar-size: m/64
    longs, e.g. 16 KiB for m=2^17) and embed it as ONE array literal —
-   membership is k ``element_at`` lookups + bitwise AND per row; OR
-   keep the words as a DataFrame and LEFT-join the probe's word indexes
-   against it with a broadcast hash join per seed (`mode="join"`) — the
-   path that still works when m outgrows a comfortable plan literal
-   (m=2^30 -> 16M words -> a 128 MiB broadcast, never a plan literal).
-
-Both modes produce identical row sets (pinned by test); neither
-shuffles the probe side before the filter.
+   membership is k ``element_at`` lookups + bitwise AND per row, and the
+   probe side is never shuffled before the filter.
 """
 from __future__ import annotations
 
@@ -48,8 +42,7 @@ def bloom_words(keys: DataFrame, key_col: str, m_bits: int = 1 << 15,
 
     The only shuffle is the word aggregation, capped at m/64 rows
     regardless of key count.  Missing word_idx rows mean an all-zero
-    word (the literal path fills them in; the join path reads a miss
-    as null and fails the membership test — same semantics).
+    word (``collect_bloom`` fills them in).
     """
     pos = keys.select(
         F.explode_outer(F.array(*_positions(F.col(key_col), m_bits, k)))
@@ -95,46 +88,21 @@ def bloom_contains(key: Column, words: list[int], m_bits: int,
 
 def bloom_prefilter(probe: DataFrame, key_col: str,
                     keys: DataFrame, keys_col: str,
-                    m_bits: int = 1 << 15, k: int = 3,
-                    mode: str = "literal") -> DataFrame:
+                    m_bits: int = 1 << 15, k: int = 3) -> DataFrame:
     """Probe rows that PASS the Bloom built over keys (superset of the
     true matches: zero false negatives, ~fp false positives)."""
-    if mode == "literal":
-        words = collect_bloom(keys, keys_col, m_bits, k)
-        return probe.where(bloom_contains(F.col(key_col), words,
-                                          m_bits, k))
-    if mode != "join":
-        raise ValueError(f"unknown bloom mode: {mode}")
-    wtab = bloom_words(keys, keys_col, m_bits, k)
-    out = probe
-    cond = F.lit(True)
-    for i, p in enumerate(_positions(F.col(key_col), m_bits, k)):
-        out = (out
-               .withColumn(f"_bw{i}", p)
-               .withColumn(f"_bwi{i}", F.expr(f"_bw{i} DIV 64"))
-               .join(F.broadcast(
-                   wtab.select(F.col("word_idx").alias(f"_bwi{i}"),
-                               F.col("word").alias(f"_bword{i}"))),
-                   f"_bwi{i}", "left"))
-        cond = cond & (F.col(f"_bword{i}").isNotNull() & (
-            F.col(f"_bword{i}")
-            .bitwiseAND(_shiftleft1(F.col(f"_bw{i}") % F.lit(64)))
-            != F.lit(0)))
-    drop = [c for i in range(k) for c in (f"_bw{i}", f"_bwi{i}",
-                                          f"_bword{i}")]
-    return out.where(cond).drop(*drop)
+    words = collect_bloom(keys, keys_col, m_bits, k)
+    return probe.where(bloom_contains(F.col(key_col), words, m_bits, k))
 
 
 def bloom_semi_join(probe: DataFrame, key_col: str,
                     keys: DataFrame, keys_col: str,
-                    m_bits: int = 1 << 15, k: int = 3,
-                    mode: str = "literal") -> DataFrame:
+                    m_bits: int = 1 << 15, k: int = 3) -> DataFrame:
     """Exact semi-join probe⋉keys with Bloom pre-pruning: the probe
     stream is cut to |matches|·(1+fp) rows map-side BEFORE the exact
     join shuffles anything.  Result rows are exactly the probe rows
     whose key exists in keys (the refine join removes Bloom false
     positives), so correctness never depends on m or k."""
-    pre = bloom_prefilter(probe, key_col, keys, keys_col, m_bits, k,
-                          mode)
+    pre = bloom_prefilter(probe, key_col, keys, keys_col, m_bits, k)
     kd = keys.select(F.col(keys_col).alias(key_col)).dropDuplicates()
     return pre.join(kd, key_col, "left_semi")

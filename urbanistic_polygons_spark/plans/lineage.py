@@ -141,6 +141,21 @@ def make_lineage_store(spark: SparkSession, root: str,
     return LineageStore(root)
 
 
+def _counters(store, stage: str) -> dict:
+    """Aggregate stage counters, derived from the snapshot log on every
+    call so they can never lag a commit; ``{}`` for a stage with no
+    snapshot."""
+    snaps = store.snapshots(stage)
+    if not snaps:
+        return {}
+    parts = store.committed_partitions(stage)
+    return {"stage": stage, "partitions": parts,
+            "n_partitions": len(parts),
+            "n_rows": sum(s["rows_added"] for s in snaps),
+            "current_snapshot": snaps[-1]["snapshot_id"],
+            "committed_at": snaps[-1]["committed_at"]}
+
+
 class IcebergLineageStore:
     """The same checkpoint/read/rollback/maintenance surface as
     :class:`LineageStore`, mapped onto REAL Iceberg snapshot commits
@@ -197,15 +212,7 @@ class IcebergLineageStore:
         return sorted(p["partition"][0] for p in parts)
 
     def counters(self, stage: str) -> dict:
-        snaps = self.snapshots(stage)
-        if not snaps:
-            return {}
-        parts = self.committed_partitions(stage)
-        return {"stage": stage, "partitions": parts,
-                "n_partitions": len(parts),
-                "n_rows": sum(s["rows_added"] for s in snaps),
-                "current_snapshot": snaps[-1]["snapshot_id"],
-                "committed_at": snaps[-1]["committed_at"]}
+        return _counters(self, stage)
 
     # -- commit / read / rollback ------------------------------------------
 
@@ -273,10 +280,6 @@ class LineageStore:
     def _snapshots_path(self, stage: str) -> Path:
         return self.root / f"_snapshots_{stage}.json"
 
-    def _lineage_path(self, stage: str) -> Path:
-        # legacy aggregate counters (kept for the pipeline's stage report)
-        return self.root / f"_lineage_{stage}.json"
-
     @staticmethod
     def _atomic_write(path: Path, payload: dict) -> None:
         """Write-to-temp + rename: a crash mid-write must never truncate
@@ -326,10 +329,7 @@ class LineageStore:
         return sorted(parts)
 
     def counters(self, stage: str) -> dict:
-        p = self._lineage_path(stage)
-        if not p.exists():
-            return {}
-        return json.loads(p.read_text())
+        return _counters(self, stage)
 
     # -- commit / read / rollback -------------------------------------------
 
@@ -398,15 +398,6 @@ class LineageStore:
         })
         self._atomic_write(self._snapshots_path(stage),
                            {"snapshots": snaps, "last_id": cid})
-        all_parts = self.committed_partitions(stage)
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": all_parts,
-            "n_partitions": len(all_parts),
-            "n_rows": sum(s["rows_added"] for s in snaps),
-            "current_snapshot": cid,
-            "committed_at": time.time(),
-        })
         if not any(s["added_partitions"] for s in snaps):
             # nothing has EVER been written for this stage: the directory
             # holds no parquet footers, so a read-back would fail schema
@@ -431,15 +422,6 @@ class LineageStore:
         keep = [s for s in log["snapshots"] if s["snapshot_id"] <= snapshot_id]
         self._atomic_write(self._snapshots_path(stage),
                            {"snapshots": keep, "last_id": log["last_id"]})
-        parts = self.committed_partitions(stage)
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": parts,
-            "n_partitions": len(parts),
-            "n_rows": sum(s["rows_added"] for s in keep),
-            "current_snapshot": snapshot_id if keep else None,
-            "committed_at": time.time(),
-        })
 
     def is_complete(self, stage: str, expected_partitions: int) -> bool:
         c = self.counters(stage)
@@ -479,29 +461,17 @@ class LineageStore:
          .write.mode("append")
          .partitionBy(part_col, "_commit")
          .parquet(str(self._stage_dir(stage))))
-        rows = sum(s["rows_added"] for s in old)
-        parts = self.committed_partitions(stage)
         self._atomic_write(self._snapshots_path(stage), {
             "snapshots": [{
                 "snapshot_id": cid,
                 "parent_id": old[-1]["snapshot_id"],
                 "stage": stage,
-                "added_partitions": parts,
-                "rows_added": rows,
+                "added_partitions": self.committed_partitions(stage),
+                "rows_added": sum(s["rows_added"] for s in old),
                 "committed_at": time.time(),
                 "compacted_from": [s["snapshot_id"] for s in old],
             }],
             "last_id": cid,
-        })
-        # keep the legacy counters file in step (checkpoint/rollback do):
-        # stale counters would point current_snapshot at an expired id
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": parts,
-            "n_partitions": len(parts),
-            "n_rows": rows,
-            "current_snapshot": cid,
-            "committed_at": time.time(),
         })
         return cid
 

@@ -8,6 +8,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """48g, or half of this host's physical memory if that is less: a
+    driver heap sized past the RAM gets the JVM killed by the OOM killer
+    before the GC ever pushes back."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = phys // 2 ** 21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "urbanistic_polygons_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -25,7 +34,8 @@ def get_spark(app_name: str = "urbanistic_polygons_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
