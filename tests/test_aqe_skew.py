@@ -1,7 +1,7 @@
 """AQE skew-join evidence: the session enables
 spark.sql.adaptive.skewJoin (session.py:24) — the runtime half of the
 north_rule's skew story (the static half is salting, `salted_agg` /
-`salted_prefix` in catalog.py).  This test proves the knob actually
+`salted_prefix` in catalog/spatial.py).  This test proves the knob actually
 *does* something on this engine: a deliberately skewed sort-merge join
 gets its hot partition split by AQE (``skew=true`` in the final
 adaptive plan) and the results are bit-identical with the optimization

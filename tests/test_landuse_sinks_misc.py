@@ -158,6 +158,34 @@ def test_mvt_sink(spark):
     assert ftypes == [3]  # POLYGON
 
 
+def test_mvt_blobs_ignore_row_order_and_partitioning(spark):
+    """A tile's bytes depend only on its features: the same faces fed in
+    shuffled row order and repartitioned encode to identical blobs per
+    tile, including two faces that share a face_guid."""
+    from urbanistic_polygons_spark.sources.mvt import faces_to_mvt
+
+    rows = [(f"face_{(7 * i) % 12:02d}", _sq(i * S / 4, (i % 3) * S / 4,
+                                             S / 5, S / 5),
+             BASE_LON + i * S / 4, BASE_LAT + (i % 3) * S / 4,
+             BASE_LON + i * S / 4 + S / 5, BASE_LAT + (i % 3) * S / 4 + S / 5)
+            for i in range(12)]
+    rows.append(("face_03", _sq(S, 0, S / 3, S / 3), BASE_LON + S, BASE_LAT,
+                 BASE_LON + S + S / 3, BASE_LAT + S / 3))
+    schema = ("face_guid string, ring string, min_lon double, "
+              "min_lat double, max_lon double, max_lat double")
+
+    def blobs(df):
+        return sorted((r.tile_x, r.tile_y, r.n_features, bytes(r.mvt))
+                      for r in faces_to_mvt(df, zoom=14).collect())
+
+    base = blobs(spark.createDataFrame(rows, schema).coalesce(1))
+    shuffled = [rows[i] for i in np.random.default_rng(7).permutation(
+        len(rows))]
+    again = blobs(spark.createDataFrame(shuffled, schema).repartition(5))
+    assert len(base) >= 2 and max(t[2] for t in base) >= 3
+    assert again == base
+
+
 def test_lineage_resume(spark, tmp_path):
     from urbanistic_polygons_spark.plans.lineage import LineageStore
     store = LineageStore(str(tmp_path / "ckpt"))

@@ -1,7 +1,8 @@
 """Engine-wide lint: the no-per-row-Python rule (BASELINE.json input_hint)
 is enforced structurally — no row-at-a-time `pyspark.sql.functions.udf`
-anywhere in the package.  Arrow-batched pandas_udf / applyInPandas /
-mapInPandas are the only sanctioned Python paths."""
+anywhere in the package.  Arrow-batched Python is the only sanctioned
+path: pandas_udf / applyInPandas / mapInPandas, and the pandas-free
+applyInArrow / mapInArrow (BASELINE allows pandas and Arrow UDFs)."""
 
 import re
 from pathlib import Path
@@ -30,10 +31,11 @@ def test_no_row_at_a_time_udfs():
 
 
 def test_pandas_udfs_are_batched():
-    """Every mapInPandas/applyInPandas callsite exists (sanity that the
-    sanctioned path is what's used)."""
+    """Batched callsites exist (sanity that the sanctioned pandas/Arrow
+    path is what's used)."""
     uses = 0
     for py in PKG.rglob("*.py"):
-        uses += len(re.findall(r"mapInPandas|applyInPandas|pandas_udf",
+        uses += len(re.findall(r"mapInPandas|applyInPandas|pandas_udf"
+                               r"|mapInArrow|applyInArrow",
                                py.read_text()))
     assert uses >= 5

@@ -111,36 +111,97 @@ def test_partition_invariance(data):
     pd.testing.assert_frame_equal(a, b)
 
 
+# one z14 cell in Belgium (its west edge, width and a latitude inside
+# it), for hand-placed kNN probes
+KNN_TX, KNN_TY, KNN_N = 8300, 5447, 1 << 14
+KNN_CELL = KNN_TY * KNN_N + KNN_TX
+KNN_W = 360.0 / KNN_N                      # cell width in degrees
+KNN_LON0 = KNN_TX * KNN_W - 180.0          # west edge of the cell
+KNN_LAT = 51.43
+KNN_COLS = ["doc_id", "span_idx", "cell_id", "lon", "lat", "polygon_guid",
+            "method"]
+
+
+def _square(cx, cy, s=1e-4):
+    pts = [(cx - s, cy - s), (cx + s, cy - s), (cx + s, cy + s),
+           (cx - s, cy + s), (cx - s, cy - s)]
+    return ";".join(f"{x} {y}" for x, y in pts)
+
+
+def _snap(spark, orphans, polys):
+    """knn_snap over (doc_id, lon, cell offset) orphans and (guid,
+    centroid lon, cell offset) polygons, cells counted east of KNN_CELL."""
+    from urbanistic_polygons_spark.operators.knn import knn_snap
+
+    o = spark.createDataFrame(
+        [(d, 0, KNN_CELL + dx, lon, KNN_LAT) for d, lon, dx in orphans],
+        "doc_id long, span_idx int, cell_id long, lon double, lat double")
+    p = spark.createDataFrame(
+        [(g, _square(lon, KNN_LAT), [KNN_CELL + dx]) for g, lon, dx in polys],
+        "polygon_guid string, ring string, cells array<long>")
+    return knn_snap(o, p)
+
+
 def test_knn_block_semantics(spark):
     """Probe for the 3x3-block tier rule: an orphan whose OWN cell holds a
     far polygon while the adjacent cell holds a nearer one must snap to
     the nearer adjacent-cell polygon (the expand loop's first probe is
     the whole 3x3 block keyed by distance, not own-cell-first)."""
-    from urbanistic_polygons_spark.operators.knn import knn_snap
-
-    tx, ty, n = 8300, 5447, 1 << 14
-    cell = ty * n + tx
-    lon0 = tx / n * 360.0 - 180.0          # west edge of the own cell
-    lon1 = (tx + 1) / n * 360.0 - 180.0    # east edge
-    lat_mid = 51.43                        # inside ty=5447 at z14
-
-    def square(cx, cy, s=1e-4):
-        pts = [(cx - s, cy - s), (cx + s, cy - s), (cx + s, cy + s),
-               (cx - s, cy + s), (cx - s, cy - s)]
-        return ";".join(f"{x} {y}" for x, y in pts)
-
-    orphan_lon = lon1 - 0.0005             # near the east edge
-    orphans = spark.createDataFrame(
-        [(7, 0, cell, orphan_lon, lat_mid)],
-        "doc_id long, span_idx int, cell_id long, lon double, lat double")
-    polys = spark.createDataFrame(
-        [("far-own", square(lon0 + 0.0005, lat_mid), [cell]),
-         ("near-adjacent", square(lon1 + 0.0005, lat_mid), [cell + 1])],
-        "polygon_guid string, ring string, cells array<long>")
-    got = knn_snap(orphans, polys).toPandas()
+    got = _snap(spark, [(7, KNN_LON0 + KNN_W - 0.0005, 0)],
+                [("far-own", KNN_LON0 + 0.0005, 0),
+                 ("near-adjacent", KNN_LON0 + KNN_W + 0.0005, 1)]).toPandas()
     assert len(got) == 1
     assert got.iloc[0].polygon_guid == "near-adjacent"
     assert got.iloc[0].method == "knn"
+
+
+def test_knn_tier_beats_distance(spark):
+    """A ring-2 centroid nearer than every ring-1 centroid still loses:
+    the first non-empty block (own cell + ring 1) wins before distance."""
+    orphan = KNN_LON0 + 0.0005
+    near_ring2 = KNN_LON0 - KNN_W - 0.0005          # ~1 cell west
+    far_ring1 = KNN_LON0 + 2 * KNN_W - 0.0005       # ~2 cells east
+    assert abs(near_ring2 - orphan) < abs(far_ring1 - orphan)
+    got = _snap(spark, [(1, orphan, 0)],
+                [("near-ring2", near_ring2, -2),
+                 ("far-ring1", far_ring1, 1)]).collect()
+    assert [(r.polygon_guid, r.method) for r in got] == [("far-ring1", "knn")]
+
+
+def test_knn_equidistant_tie_breaks_on_guid(spark):
+    """Two centroids mirrored about the orphan, in the same tier: the
+    smaller polygon_guid wins whatever the input order."""
+    orphan = KNN_LON0 + KNN_W / 2
+    got = _snap(spark, [(1, orphan, 0)],
+                [("guid-b", orphan - 0.002, 0),
+                 ("guid-a", orphan + 0.002, 0)]).collect()
+    assert [(r.polygon_guid, r.method) for r in got] == [("guid-a", "knn")]
+
+
+def test_knn_empty_halo_is_none(spark):
+    """An orphan whose 7x7 halo holds no centroid comes back once, with
+    method='none' and a null guid, next to a snapped one."""
+    far = KNN_LON0 + 10 * KNN_W + 0.001
+    got = _snap(spark, [(1, KNN_LON0 + 0.001, 0), (2, far, 10)],
+                [("p10", far + 0.001, 10)]).collect()
+    assert sorted((r.doc_id, r.polygon_guid, r.method) for r in got) == [
+        (1, None, "none"), (2, "p10", "knn")]
+
+
+def test_knn_empty_orphans(spark):
+    """No orphans: an empty frame with the seven output columns."""
+    out = _snap(spark, [], [("p", KNN_LON0, 0)])
+    assert out.columns == KNN_COLS
+    assert out.count() == 0
+
+
+def test_knn_plan_is_one_broadcast_join(spark):
+    """The snap is one broadcast of the centroid index joined once: no
+    second broadcast and no anti-join re-deriving the unmatched orphans."""
+    out = _snap(spark, [(1, KNN_LON0 + 0.001, 0)], [("p", KNN_LON0, 0)])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "LeftAnti" not in plan, plan
 
 
 def test_pip_only_points_inside(data):

@@ -39,7 +39,7 @@ DEFAULT_BUCKET_WIDTH = 1 << 26
 
 def epoch_hash(seed_prefix, doc_id) -> F.Column:
     """Portable 31-bit hash of (seed, doc_id) — identical closed form in
-    the DuckDB oracle (md5-hex-to-int, catalog.py `_H31`)."""
+    the DuckDB oracle (md5-hex-to-int, catalog/textsql.py `_H31`)."""
     s = F.concat(F.lit(seed_prefix), doc_id.cast("string"))
     return F.pmod(F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
                   F.lit(2147483647))

@@ -156,6 +156,13 @@ def _counters(store, stage: str) -> dict:
             "committed_at": snaps[-1]["committed_at"]}
 
 
+def _is_complete(store, stage: str, expected_partitions: int) -> bool:
+    """At least ``expected_partitions`` partitions of ``stage`` are
+    committed."""
+    c = store.counters(stage)
+    return bool(c) and c.get("n_partitions", 0) >= expected_partitions
+
+
 class IcebergLineageStore:
     """The same checkpoint/read/rollback/maintenance surface as
     :class:`LineageStore`, mapped onto REAL Iceberg snapshot commits
@@ -243,8 +250,7 @@ class IcebergLineageStore:
             f"('{self.namespace}.{stage}', {int(snapshot_id)})")
 
     def is_complete(self, stage: str, expected_partitions: int) -> bool:
-        c = self.counters(stage)
-        return bool(c) and c.get("n_partitions", 0) >= expected_partitions
+        return _is_complete(self, stage, expected_partitions)
 
     # -- maintenance --------------------------------------------------------
 
@@ -424,8 +430,7 @@ class LineageStore:
                            {"snapshots": keep, "last_id": log["last_id"]})
 
     def is_complete(self, stage: str, expected_partitions: int) -> bool:
-        c = self.counters(stage)
-        return bool(c) and c.get("n_partitions", 0) >= expected_partitions
+        return _is_complete(self, stage, expected_partitions)
 
     # -- maintenance: compaction + orphan cleanup ----------------------------
 

@@ -1,14 +1,18 @@
 """Mapbox Vector Tile (MVT) sink: a from-scratch pure-Python protobuf
-encoder for the MVT 2.1 spec, run per tile group via applyInPandas.
+encoder for the MVT 2.1 spec (``encode_tile``) and one Arrow tile adapter
+that runs it per tile group.
 
 Reference analog: API/Controllers/TileController.cs:78-141 (layer assembly,
 dominant type) and LanduseTileController.cs:85-126 — there via the
 NetTopologySuite MVT writer; here the wire format is hand-encoded (varint +
 zigzag + command integers) because no protobuf lib ships in the image.
 
-Scale: one output row per (z, x, y) tile; the groupBy key IS the tile id so
-encoding parallelizes across the cluster and each task touches one tile's
-features only.
+Scale: rows are exploded JVM-side to their covering tiles and grouped on
+(tile_x, tile_y); ``applyInArrow`` hands each tile's rows to the encoder
+as one ``pyarrow.Table`` and gets back one row per tile, so encoding
+parallelizes across tiles and each task touches one tile's features only.
+Both sinks (``faces_to_mvt``, ``landuse_to_mvt``) go through the same
+adapter.
 """
 
 from __future__ import annotations
@@ -16,7 +20,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .. import kernels
 
@@ -175,23 +180,6 @@ def encode_tile(tile_x: int, tile_y: int, zoom: int,
 MVT_SCHEMA = "tile_z int, tile_x long, tile_y long, mvt binary, n_features int"
 
 
-def mvt_kernel(zoom: int):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["tile_z", "tile_x", "tile_y",
-                                         "mvt", "n_features"])
-        tx = int(pdf["tile_x"].iloc[0])
-        ty = int(pdf["tile_y"].iloc[0])
-        pdf = pdf.sort_values("face_guid")  # deterministic feature order
-        feats = [{"ring": r.ring,
-                  "props": {"face_guid": r.face_guid}}
-                 for r in pdf.itertuples(index=False)]
-        blob = encode_tile(tx, ty, zoom, feats)
-        return pd.DataFrame([{"tile_z": zoom, "tile_x": tx, "tile_y": ty,
-                              "mvt": blob, "n_features": len(feats)}])
-    return kernel
-
-
 def _bbox_tile_cover(df, zoom: int, keep_cols: list[str]):
     """Explode each row to its covering (tile_x, tile_y) set from the
     bbox columns (min_lon..max_lat), keeping ``keep_cols``.  A bbox always
@@ -215,9 +203,49 @@ def _bbox_tile_cover(df, zoom: int, keep_cols: list[str]):
              F.col("tile_xy.y").alias("tile_y"))
 
 
+def _type_summary(cls: pa.ChunkedArray) -> str:
+    """'cls:count,...' over the non-null classes, sorted by class."""
+    counts = pc.value_counts(pc.drop_null(cls)).to_pylist()
+    return ",".join(f"{c}:{n}" for c, n in
+                    sorted((d["values"], d["counts"]) for d in counts))
+
+
+def _encode_tiles(tiled, zoom: int, layer_name: str, order: str,
+                  props: list[tuple[str, str]], summary: str | None = None):
+    """The one tile adapter: ``tiled`` (tile_x, tile_y, ring, ...) -> one
+    row (tile_z, tile_x, tile_y, mvt, n_features[, type_summary]) per
+    tile, encoded by ``encode_tile`` inside ``applyInArrow``.  Features
+    are ordered by ``order`` then ring, so a tile's bytes do not depend on
+    the input's row order or partitioning; ``props`` maps each feature
+    property name to its source column, in tag order; ``summary`` names
+    the column whose per-class counts fill ``type_summary``."""
+    schema = MVT_SCHEMA if summary is None else (
+        MVT_SCHEMA + ", type_summary string")
+    names = [name for name, _ in props]
+
+    # no type hints: applyInArrow infers the table/iterator form from
+    # them, and a partly annotated kernel fails that inference
+    def kernel(key, tbl):
+        tbl = tbl.sort_by([(order, "ascending"), ("ring", "ascending")])
+        cols = [tbl[col].to_pylist() for _, col in props]
+        feats = [{"ring": ring, "props": dict(zip(names, vals))}
+                 for ring, *vals in zip(tbl["ring"].to_pylist(), *cols)]
+        tx, ty = key[0].as_py(), key[1].as_py()
+        row = {"tile_z": pa.array([zoom], pa.int32()),
+               "tile_x": [tx], "tile_y": [ty],
+               "mvt": [encode_tile(tx, ty, zoom, feats, layer_name)],
+               "n_features": pa.array([len(feats)], pa.int32())}
+        if summary is not None:
+            row["type_summary"] = [_type_summary(tbl[summary])]
+        return pa.table(row)
+
+    return tiled.groupBy("tile_x", "tile_y").applyInArrow(kernel, schema)
+
+
 def faces_to_mvt(faces, zoom: int = kernels.DEFAULT_ZOOM):
     """faces(face_guid, ring, min_lon..max_lat) -> one MVT blob per covering
-    tile (S7 sink).
+    tile (S7 sink): layer 'faces', each feature tagged with its
+    ``face_guid``.
 
     Tile cover: if the input already carries ``tile_x``/``tile_y`` columns
     (a caller that knows the exact integer cover — e.g. the density
@@ -228,45 +256,18 @@ def faces_to_mvt(faces, zoom: int = kernels.DEFAULT_ZOOM):
         tiled = faces.select("face_guid", "ring", "tile_x", "tile_y")
     else:
         tiled = _bbox_tile_cover(faces, zoom, ["face_guid", "ring"])
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        mvt_kernel(zoom), MVT_SCHEMA)
-
-
-LANDUSE_MVT_SCHEMA = ("tile_z int, tile_x long, tile_y long, mvt binary, "
-                      "n_features int, type_summary string")
-
-
-def landuse_mvt_kernel(zoom: int):
-    """Per-tile encoder for the RAW landuse serve path: layer 'landuse',
-    each feature tagged with its classified ``type`` attribute (reference
-    LanduseTileController.cs:85-126 — scan -> classify -> closed-ring ->
-    dedup -> NTS MVT layer with the 'type' property)."""
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["tile_z", "tile_x", "tile_y",
-                                         "mvt", "n_features",
-                                         "type_summary"])
-        tx = int(pdf["tile_x"].iloc[0])
-        ty = int(pdf["tile_y"].iloc[0])
-        pdf = pdf.sort_values("lu_id")  # deterministic feature order
-        feats = [{"ring": r.ring,
-                  "props": {"type": r.cls, "lu_id": int(r.lu_id)}}
-                 for r in pdf.itertuples(index=False)]
-        blob = encode_tile(tx, ty, zoom, feats, layer_name="landuse")
-        summary = ",".join(
-            f"{c}:{n}" for c, n in
-            sorted(pdf.groupby("cls").size().items()))
-        return pd.DataFrame([{"tile_z": zoom, "tile_x": tx, "tile_y": ty,
-                              "mvt": blob, "n_features": len(feats),
-                              "type_summary": summary}])
-    return kernel
+    return _encode_tiles(tiled, zoom, "faces", "face_guid",
+                         [("face_guid", "face_guid")])
 
 
 def landuse_to_mvt(polys, zoom: int = kernels.DEFAULT_ZOOM):
     """E3 raw-landuse serve sink: classified closed landuse rings
     (lu_id, cls, ring, min_lon..max_lat — classify.classify_landuse_ways
     output joined to coordinates) -> one MVT blob per covering tile with
-    a 'landuse' layer whose features carry the ``type`` attribute."""
+    a 'landuse' layer whose features carry the classified ``type``
+    attribute (reference LanduseTileController.cs:85-126), plus the
+    tile's ``type_summary``."""
     tiled = _bbox_tile_cover(polys, zoom, ["lu_id", "cls", "ring"])
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        landuse_mvt_kernel(zoom), LANDUSE_MVT_SCHEMA)
+    return _encode_tiles(tiled, zoom, "landuse", "lu_id",
+                         [("type", "cls"), ("lu_id", "lu_id")],
+                         summary="cls")
