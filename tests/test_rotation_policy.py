@@ -14,6 +14,7 @@ pushes a never-reported entry past the cap fails here instead of being
 discovered in the next verdict.
 """
 
+import hashlib
 import json
 from pathlib import Path
 
@@ -46,3 +47,25 @@ def test_ledger_names_exist_in_catalog():
     ledger = json.loads(_LEDGER.read_text())["greens"]
     stranded = sorted(k for k in ledger if k not in names)
     assert not stranded, f"ledger entries no longer in catalog: {stranded}"
+
+
+# sha256 over the "name|module:qualname|sha256(oracle)" lines of
+# build_catalog(), in registration order: moves when an entry is added,
+# dropped, reordered, re-pointed at another builder or given other
+# oracle SQL.  Update it only together with such a change.
+REGISTRATION_FINGERPRINT = (
+    "15d939af1b7cddd9792c955dbd10219332e729d0a5799ccfea8101c15888a900")
+
+
+def registration_fingerprint(catalog: dict) -> str:
+    lines = []
+    for name, spec in catalog.items():
+        fn, oracle = spec["spark"], spec["oracle"] or ""
+        lines.append(f"{name}|{fn.__module__}:{fn.__qualname__}|"
+                     f"{hashlib.sha256(oracle.encode()).hexdigest()}")
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+def test_registration_fingerprint():
+    assert (registration_fingerprint(build_catalog())
+            == REGISTRATION_FINGERPRINT)

@@ -204,6 +204,62 @@ def test_knn_plan_is_one_broadcast_join(spark):
     assert "LeftAnti" not in plan, plan
 
 
+def test_ringed_halo_matches_kernel(spark):
+    """neighbor_cells_ringed is the NumPy halo (kernels.neighbor_cells)
+    with each cell tagged by its Chebyshev ring, in the same order: an
+    interior cell, x-wrap cells at both edges, y-clamp cells at both poles
+    (whose clamped rows repeat cells) and two corners.  A null cell gives
+    49 entries with a null cell."""
+    from pyspark.sql import functions as F
+
+    from urbanistic_polygons_spark.functions.cells import neighbor_cells_ringed
+
+    n, mid = KNN_N, KNN_N // 2
+    cells = [KNN_CELL, mid * n, mid * n + n - 1, mid, (n - 1) * n + mid,
+             0, n * n - 1]
+    offs = np.arange(-3, 4)
+    dx, dy = np.meshgrid(offs, offs)
+    rings = np.maximum(abs(dx), abs(dy)).ravel().tolist()
+    expected = {c: list(zip(h.tolist(), rings)) for c, h in zip(
+        cells, kernels.neighbor_cells(np.array(cells, np.int64), ring=3))}
+    expected[None] = [(None, r) for r in rings]
+
+    out = spark.createDataFrame(
+        [(c,) for c in expected], "cell_id long").select(
+        "cell_id", neighbor_cells_ringed(F.col("cell_id")).alias("h"))
+    assert (out.schema["h"].dataType.simpleString()
+            == "array<struct<cell:bigint,ring:int>>")
+    got = {r.cell_id: [(e.cell, e.ring) for e in r.h] for r in out.collect()}
+    assert got == expected
+    assert len({c for c, _ in got[mid]}) < 49     # the y clamp repeats
+
+
+def test_assign_plan_build_py4j_budget(data, monkeypatch):
+    """Building (not running) the flagship plan stays within a py4j
+    round-trip budget: each ``F.*`` call is 10-20 round-trips, so a Python
+    loop that builds a fixed-shape expression family call by call (the
+    49-struct kNN halo took ~7,000) shows up here as driver time."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    _, _, docs, polys = data
+    assign_documents(docs, polys)        # warm-up: JVM lookups get cached
+    gc.collect()                         # its JVM handles detach here
+    calls = 0
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    assign_documents(docs, polys)
+    monkeypatch.undo()
+    assert 0 < calls <= 3000, calls
+
+
 def test_pip_only_points_inside(data):
     _, polys_pdf, docs, polys = data
     hits = (assign_documents(docs, polys).filter("method = 'pip'")
