@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from urbanistic_polygons_spark.operators.dedup import near_dup_components
 from urbanistic_polygons_spark.plans import lineage
-from urbanistic_polygons_spark.plans.lineage import cut_lineage
+from urbanistic_polygons_spark.plans.lineage import cut_lineage, fixpoint
 
 
 def _size_in_bytes(df) -> int:
@@ -56,22 +56,32 @@ def test_cut_lineage_strips_inherited_stats(spark, monkeypatch):
 
 
 def test_cut_lineage_bounds_selfjoin_stat_growth(spark):
-    """20 rounds of checkpoint -> self-join: with cut_lineage the
+    """20 fixpoint rounds of checkpoint -> self-join: with cut_lineage the
     estimate stays bounded; with plain localCheckpoint its digit count
     would double per round (19 * 2^20 digits by round 20 — unrunnable,
-    so only the fixed path is executed here and the bound asserted)."""
-    labels = spark.range(50).select(
-        F.col("id").alias("node"), F.col("id").alias("component"))
-    for _ in range(20):
+    so only the fixed path is executed here and the bound asserted).
+    The step never converges, so the loop also warns at its cap."""
+    digits = []
+
+    def step(labels):
+        if "_changed" in labels.columns:      # a checkpoint of fixpoint
+            digits.append(len(str(_size_in_bytes(labels))))
         ptr = labels.select(F.col("node").alias("p"),
                             F.col("component").alias("pc"))
-        jumped = (labels.join(ptr, labels.component == ptr.p, "left")
-                  .select("node",
-                          F.coalesce("pc", "component").alias("component")))
-        labels = cut_lineage(jumped)
-        # digit count of the post-checkpoint estimate stays at the
-        # 19-digit default instead of doubling each round
-        assert len(str(_size_in_bytes(labels))) < 25
+        return (labels.join(ptr, labels.component == ptr.p, "left")
+                .select("node",
+                        F.coalesce("pc", "component").alias("component"),
+                        F.lit(True).alias("_changed")))
+
+    labels = spark.range(50).select(
+        F.col("id").alias("node"), F.col("id").alias("component"))
+    with pytest.warns(RuntimeWarning, match="jump stopped at max_rounds=20"):
+        labels = fixpoint(step, labels, max_rounds=20, name="jump")
+    # digit count of every post-checkpoint estimate stays at the
+    # 19-digit default instead of doubling each round
+    assert len(digits) == 19 and max(digits) < 25
+    assert len(str(_size_in_bytes(labels))) < 25
+    assert labels.columns == ["node", "component"]
     assert labels.count() == 50
 
 

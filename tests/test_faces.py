@@ -123,6 +123,11 @@ def test_faces_kernel_pandas():
     # deterministic: re-run gives identical guids
     out2 = faces_kernel(pdf)
     assert sorted(out["face_guid"]) == sorted(out2["face_guid"])
+    # the edges' row order does not rotate a ring: each starts at its
+    # top-left vertex
+    rot = faces_kernel(pdf.iloc[[1, 2, 0]].reset_index(drop=True))
+    assert sorted(rot["ring"]) == sorted(out["ring"])
+    assert all(r.startswith("%.9f %.9f" % V2) for r in out["ring"])
 
 
 def test_faces_kernel_partition_invariance():

@@ -134,6 +134,7 @@ def _dijkstra(edges, source):
     return dist
 
 
+@pytest.mark.filterwarnings("error:sssp_int stopped")
 @pytest.mark.parametrize("rounds", [1, 2, 8])
 def test_sssp_round_bounded_matches_full_relaxation(spark, rounds):
     # weighted chain + shortcuts: needs several rounds to converge, so
@@ -142,11 +143,17 @@ def test_sssp_round_bounded_matches_full_relaxation(spark, rounds):
     edges = [(0, 1, 10), (1, 2, 10), (2, 3, 10), (3, 4, 10),
              (0, 2, 50), (1, 4, 100), (0, 4, 500)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {r["node"]: r["dist"]
-           for r in sssp_int(df, 0, max_rounds=rounds).collect()}
-    assert got == _brute_sssp_rounds(edges, 0, rounds)
+    want = _brute_sssp_rounds(edges, 0, rounds)
+    if want != _brute_sssp_rounds(edges, 0, rounds - 1):
+        # round `rounds` still improves: the bound is hit on purpose
+        with pytest.warns(RuntimeWarning, match="sssp_int stopped"):
+            got = sssp_int(df, 0, max_rounds=rounds)
+    else:
+        got = sssp_int(df, 0, max_rounds=rounds)
+    assert {r["node"]: r["dist"] for r in got.collect()} == want
 
 
+@pytest.mark.filterwarnings("error:sssp_int stopped")
 def test_sssp_fixpoint_matches_dijkstra_random(spark):
     rng = random.Random(11)
     for trial in range(3):

@@ -138,17 +138,62 @@ def test_near_dup_components_huge_ids(spark):
                    (base, base), (base + 1, base)}
 
 
-def test_near_dup_components_round_cap_warns(spark):
-    """A 300-node chain cannot converge in 2 rounds: hitting the cap must
-    warn instead of silently returning non-minimal labels."""
+def _components_capped(spark):
+    # a 300-node chain cannot converge in 2 rounds
     from pyspark.sql import functions as F
 
     from urbanistic_polygons_spark.operators.dedup import near_dup_components
     pairs = spark.range(299).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-    with pytest.warns(RuntimeWarning, match="max_rounds=2"):
-        out = near_dup_components(pairs, max_rounds=2)
+    out = near_dup_components(pairs, max_rounds=2)
+    # the labels are not yet their component minimum
     assert out.filter(F.col("component") != 0).count() > 0
+
+
+def _sssp_capped(spark):
+    # a 4-hop chain still improves in round 1
+    from urbanistic_polygons_spark.operators.graph_algos import sssp_int
+    edges = spark.createDataFrame([(i, i + 1, 1) for i in range(4)],
+                                  "src long, dst long, w long")
+    out = sssp_int(edges, 0, max_rounds=1)
+    assert {r.node: r.dist for r in out.collect()} == {0: 0, 1: 1}
+
+
+def _planarize_capped(spark):
+    # two crossing edges split in round 1; the cap leaves no round to
+    # confirm that the pieces are planar
+    from urbanistic_polygons_spark.operators.planarize import planarize
+    edges = spark.createDataFrame(
+        [("a", 4.78, 51.26, 4.784, 51.264, None),
+         ("b", 4.78, 51.264, 4.784, 51.26, None)],
+        "edge_key string, v1_lon double, v1_lat double, "
+        "v2_lon double, v2_lat double, shape_pts string")
+    assert planarize(edges, max_rounds=1).count() == 4
+
+
+def _prune_capped(spark):
+    # a 4-edge chain merges in round 1 and again in round 2
+    from urbanistic_polygons_spark.operators.graph_build import (
+        prune_shape_points)
+    edges = spark.createDataFrame(
+        [(7, i, float(i), 0.0, float(i + 1), 0.0, None) for i in range(4)],
+        "way_id long, seg long, v1_lon double, v1_lat double, "
+        "v2_lon double, v2_lat double, shape_pts string")
+    assert prune_shape_points(edges, max_rounds=1).count() < 4
+
+
+_CAPPED = {"near_dup_components": _components_capped,
+           "sssp_int": _sssp_capped,
+           "planarize": _planarize_capped,
+           "prune_shape_points": _prune_capped}
+
+
+@pytest.mark.parametrize("name", list(_CAPPED))
+def test_fixpoint_round_cap_warns(spark, name):
+    """Every run-until-nothing-changes loop that hits its round cap warns
+    instead of silently returning a non-converged result."""
+    with pytest.warns(RuntimeWarning, match=f"{name} stopped at max_rounds="):
+        _CAPPED[name](spark)
 
 
 def test_winnow_fingerprints_semantics(spark):

@@ -74,3 +74,38 @@ def test_noded_input_unchanged(spark):
     edges = spark.createDataFrame(rows, EDGE_SCHEMA)
     assert find_intersections(edges).isEmpty()
     assert planarize(edges).count() == 2
+
+
+def test_unsplit_edges_keep_orientation_and_numbering(spark):
+    """Only split edges are rewritten: a vertical edge away from the
+    crossing keeps its (v1, v2) orientation (re-orienting it by the
+    strict ``v1_lon < v2_lon`` test would flip it whenever any other
+    edge is split), and the (way_id, seg) renumbering of a way that
+    mixes split and unsplit segments is dense in point order."""
+    from urbanistic_polygons_spark.operators.graph_build import planarize_edges
+
+    x = [B_LON + i * S for i in range(4)]
+    rows = [
+        # way 1: three segments along the parallel; seg 1 gets crossed
+        (1, 0, x[0], B_LAT, x[1], B_LAT, None),
+        (1, 1, x[1], B_LAT, x[2], B_LAT, None),
+        (1, 2, x[2], B_LAT, x[3], B_LAT, None),
+        # way 2: crosses way 1's seg 1 without a shared node
+        (2, 0, x[1] + S / 4, B_LAT - S, x[2] - S / 4, B_LAT + S, None),
+        # way 3: vertical, north -> south, far from the crossing
+        (3, 0, x[3], B_LAT + 2 * S, x[3], B_LAT + S, None),
+    ]
+    edges = spark.createDataFrame(
+        rows, "way_id long, seg long, v1_lon double, v1_lat double, "
+              "v2_lon double, v2_lat double, shape_pts string")
+    out = {(r.way_id, r.seg): r for r in planarize_edges(edges).collect()}
+    assert sorted(out) == [(1, 0), (1, 1), (1, 2), (1, 3), (2, 0), (2, 1),
+                           (3, 0)]
+    v = out[(3, 0)]
+    assert (v.v1_lon, v.v1_lat, v.v2_lon, v.v2_lat) == rows[4][2:6]
+    # way 1 in point order: seg 0, the two halves of old seg 1 (split at
+    # the crossing, x[1] + S/2), old seg 2
+    xc = x[1] + S / 2
+    got = [lon for s in range(4) for lon in (out[(1, s)].v1_lon,
+                                            out[(1, s)].v2_lon)]
+    assert got == pytest.approx([x[0], x[1], x[1], xc, xc, x[2], x[2], x[3]])

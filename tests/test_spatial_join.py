@@ -240,12 +240,21 @@ def test_assign_plan_build_py4j_budget(data, monkeypatch):
     loop that builds a fixed-shape expression family call by call (the
     49-struct kNN halo took ~7,000) shows up here as driver time."""
     import gc
+    import time
 
     import py4j.clientserver as cs
 
     _, _, docs, polys = data
     assign_documents(docs, polys)        # warm-up: JVM lookups get cached
     gc.collect()                         # its JVM handles detach here
+    # ...through a queue that py4j's finalizer thread sends on its own
+    # connection, a command per handle: this collection also queues every
+    # handle that earlier tests left in reference cycles (a JavaObject and
+    # its cached JavaMembers), so let the thread drain it before counting
+    client = docs.sparkSession.sparkContext._gateway._gateway_client
+    deadline = time.monotonic() + 60
+    while client.finalizer_deque and time.monotonic() < deadline:
+        time.sleep(0.05)
     calls = 0
     send = cs.ClientServerConnection.send_command
 

@@ -18,13 +18,11 @@ nothing is O(n^2); AQE skew-join handles hot buckets.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
-from ..plans.lineage import cut_lineage, ensure_metrics_survive
+from ..plans.lineage import cut_lineage, ensure_metrics_survive, fixpoint
 
 # deterministic (a, b) parameters for the k minhash permutations
 # h_j(x) = (a_j * x + b_j) mod p, p = 2^31 - 1; a_j < 2^31 so the product
@@ -173,16 +171,15 @@ def near_dup_components(pairs: DataFrame, id_a: str = "doc_a",
     group IS its component id.  Ids may be of any orderable type (long
     doc ids, string ids, face GUIDs).
 
-    Min-label propagation to fixpoint: each round every node takes the min
-    of its own label and its neighbors' labels (one message join + one
-    min-aggregation, both shuffle-on-node-key; lineage cut per round).
-    Rounds needed = component diameter shrunk geometrically by the
-    pointer jump — near-dup clusters are tiny and dense, so a handful.
-    The loop stops when a round changes no label, checked exactly for
-    every id type by a node-keyed join of consecutive rounds (early-out
-    ``isEmpty``; nothing sums the ids).  Reaching ``max_rounds`` first
-    leaves some labels above their component minimum and raises a
-    ``RuntimeWarning``.
+    Min-label propagation on ``plans.lineage.fixpoint``: each round every
+    node takes the min of its own and its neighbors' labels (one message
+    join + one min-aggregation, both shuffle-on-node-key), then a pointer
+    jump; rounds needed = component diameter shrunk geometrically, so a
+    handful.  The aggregation also carries the node's previous label
+    (``max(prev)``; messages bring a null one), so a round flags its
+    changed labels exactly for every id type without joining two rounds.
+    Reaching ``max_rounds`` first leaves some labels above their
+    component minimum and raises a ``RuntimeWarning``.
     """
     sym = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
            .unionByName(pairs.select(F.col(id_b).alias("src"),
@@ -193,18 +190,23 @@ def near_dup_components(pairs: DataFrame, id_a: str = "doc_a",
     # min neighbor) in the same shuffle that deduplicates nodes — one
     # groupBy replaces distinct-nodes + a full first loop round
     labels = (sym.groupBy(F.col("src").alias("node"))
-              .agg(F.least(F.first("src"), F.min("dst")).alias("component"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_rounds):
+              .agg(F.least(F.first("src"), F.min("dst")).alias("component")))
+    no_prev = F.lit(None).cast(labels.schema["component"].dataType)
+
+    def step(labels):
         msgs = (sym.join(labels, sym.src == labels.node)
-                .select(F.col("dst").alias("node"), "component"))
+                .select(F.col("dst").alias("node"), "component",
+                        no_prev.alias("prev")))
         # lazy checkpoint so the jump's self-join reads ONE
         # materialization of the aggregate instead of recomputing it per
         # side (self-joins re-execute their subtree — repo rule)
         prop = cut_lineage(
-            labels.unionByName(msgs)
+            labels.select("node", "component",
+                          F.col("component").alias("prev"))
+                  .unionByName(msgs)
                   .groupBy("node")
-                  .agg(F.min("component").alias("component")),
+                  .agg(F.min("component").alias("component"),
+                       F.max("prev").alias("prev")),
             eager=False)
         # pointer jump: label(v) <- label(label(v)).  A label is always
         # itself a node of the graph, so the lookup hits; one neighbor hop
@@ -212,21 +214,12 @@ def near_dup_components(pairs: DataFrame, id_a: str = "doc_a",
         # idea; measured on the sf0.1 LSH graph: 8 plain rounds -> 4)
         ptr = prop.select(F.col("node").alias("p_node"),
                           F.col("component").alias("p_comp"))
-        jumped = cut_lineage(
-            prop.join(ptr, prop.component == ptr.p_node, "left")
-                .select("node",
-                        F.coalesce("p_comp", "component").alias("component")))
-        changed = (jumped.join(
-            labels.select("node", F.col("component").alias("_prev")), "node")
-            .filter(F.col("component") != F.col("_prev")))
-        labels = jumped
-        if changed.isEmpty():
-            break
-    else:
-        warnings.warn(
-            f"near_dup_components stopped at max_rounds={max_rounds} "
-            f"before converging; some labels are not their component "
-            f"minimum", RuntimeWarning, stacklevel=2)
+        new = F.coalesce("p_comp", "component")
+        return (prop.join(ptr, prop.component == ptr.p_node, "left")
+                .select("node", new.alias("component"),
+                        (new != F.col("prev")).alias("_changed")))
+
+    labels = fixpoint(step, labels, max_rounds, "near_dup_components")
     return labels.select(F.col("node").alias("doc_id"), "component")
 
 

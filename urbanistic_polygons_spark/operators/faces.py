@@ -323,7 +323,8 @@ def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     Input columns: anchor_cell, v1_lon, v1_lat, v2_lon, v2_lat,
     shape_pts ('lon lat;lon lat' string or None), in_anchor (bool).
     Output: one row per non-sentinel face with its clockwise ring (WKT-less
-    'lon lat;...' string), bbox and content-addressed GUID.
+    'lon lat;...' string, from its top-left vertex), bbox and
+    content-addressed GUID.
     """
     if pdf.empty:
         return pd.DataFrame(
@@ -385,6 +386,10 @@ def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         ring = g.face_ring(f)
         if ring is None:
             continue
+        # start at the top-left vertex (the face GUID's rule), so the ring
+        # text does not depend on which half-edge the walk met first
+        s = min(range(len(ring) - 1), key=lambda i: (ring[i][0], -ring[i][1]))
+        ring = ring[s:-1] + ring[:s + 1]
         lons = np.array([c[0] for c in ring])
         lats = np.array([c[1] for c in ring])
         guid = _ring_guid(lons, lats)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..plans.lineage import fixpoint
 
 log = logging.getLogger(__name__)
 
@@ -182,9 +183,10 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                            F.col("seg").cast("string"))
     has_sig = "tag_sig" in edges.columns
     sig = F.col("tag_sig") if has_sig else F.col("way_id").cast("string")
+    cols = edges.columns
 
-    for _ in range(max_rounds):
-        e = edges.withColumn("ekey", ekey).withColumn(
+    def step(edges):
+        e = edges.select(*cols).withColumn("ekey", ekey).withColumn(
             "vk1", vkey1).withColumn("vk2", vkey2).withColumn("sig", sig)
         not_loop = e.filter(F.col("vk1") != F.col("vk2"))
         ends = not_loop.select(
@@ -209,8 +211,6 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                     .withColumnRenamed("min_vk", "m2"), ["e2"])
               .filter((F.col("m1") == F.col("vk")) & (F.col("m2") == F.col("vk")))
               .select("vk", "e1", "e2"))
-        if ok.isEmpty():
-            return edges
         # orient each merging edge to END at the removed vertex, then chain
         sides = (ok.select("vk", F.col("e1").alias("ekey"), F.lit(1).alias("side"))
                  .unionByName(ok.select("vk", F.col("e2").alias("ekey"),
@@ -263,14 +263,14 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
         )
         new_edges = new_edges.select("*", *_bbox_cols())
         dropped = (sides.select("ekey").distinct())
-        survivors = (e.join(dropped, "ekey", "left_anti")
-                     .select(*[c for c in edges.columns]))
-        # cut lineage per round — the iterative plan otherwise grows
-        # multiplicatively (each round embeds the previous one several
-        # times over); localCheckpoint materializes this round's result
-        edges = (survivors.unionByName(new_edges.select(*edges.columns))
-                 .localCheckpoint(eager=True))
-    return edges
+        survivors = e.join(dropped, "ekey", "left_anti").select(*cols)
+        # merged edges are this round's change; a round with no
+        # conflict-free merge returns every edge unchanged
+        return (survivors.withColumn("_changed", F.lit(False))
+                .unionByName(new_edges.select(
+                    *cols, F.lit(True).alias("_changed"))))
+
+    return fixpoint(step, edges, max_rounds, "prune_shape_points")
 
 
 def bucket_edges_by_cell(edges: DataFrame, halo_ring: int = 1) -> DataFrame:
@@ -312,9 +312,12 @@ def planarize_edges(edges: DataFrame) -> DataFrame:
     TiledBarrierGraphExtensions.cs:39-137)."""
     from .planarize import planarize as _planarize
 
+    # the first round reads its input twice (intersection self-join and
+    # split join): derive it once
     keyed = edges.select(
         F.format_string("%d#%d", F.col("way_id"), F.col("seg")).alias("edge_key"),
-        "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts")
+        "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"
+    ).localCheckpoint(eager=False)
     flat = _planarize(keyed)
     w = Window.partitionBy("way_id").orderBy("edge_key")
     out = (flat

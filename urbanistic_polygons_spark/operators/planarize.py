@@ -12,25 +12,27 @@ spatial SELF-JOIN per round:
 3. vectorized proper-intersection solve (2x2 cross-product form) in one
    Arrow batch — proper only: endpoint touches are NOT intersections,
    matching NTS RobustLineIntersector's IsProper gate;
-4. split both edges at their hit parameters (the G2 running-sum segment
-   machinery re-applied over the augmented point list);
-5. iterate to fixpoint (OSM data is mostly pre-noded: <= 2 rounds).
+4. split both edges at their hit parameters (the G2 segmentation
+   re-applied per row over the augmented point list);
+5. iterate to fixpoint (OSM data is mostly pre-noded: <= 2 rounds),
+   re-emitting only the edges that were split.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
+from ..plans.lineage import fixpoint
 
 _EDGE_COLS = ["edge_key", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"]
 
 
-def _edge_points(edges: DataFrame) -> DataFrame:
+def _points() -> F.Column:
     """edge -> ordered point list array<struct<ord double, lon, lat>>."""
     mids = F.when(
         F.col("shape_pts").isNotNull() & (F.col("shape_pts") != ""),
@@ -48,12 +50,12 @@ def _edge_points(edges: DataFrame) -> DataFrame:
     tail = F.array(F.struct(npts.cast("double").alias("ord"),
                             F.col("v2_lon").alias("lon"),
                             F.col("v2_lat").alias("lat")))
-    return edges.withColumn("pts", F.concat(head, mids, tail))
+    return F.concat(head, mids, tail)
 
 
 def _segments(edges: DataFrame) -> DataFrame:
     """One row per consecutive point pair, with bbox + covering cell."""
-    pts = _edge_points(edges)
+    pts = edges.withColumn("pts", _points())
     segs = (
         pts.select(
             "edge_key",
@@ -146,65 +148,65 @@ def find_intersections(edges: DataFrame) -> DataFrame:
 
 
 def split_edges_at(edges: DataFrame, splits: DataFrame) -> DataFrame:
-    """Rebuild edges with split points inserted as new vertices: the G2
-    running-sum segmentation re-applied over the augmented point list."""
-    pts = _edge_points(edges).select(
-        "edge_key", F.explode("pts").alias("p")
-    ).select(
-        "edge_key", F.col("p.ord").alias("ord"),
-        F.col("p.lon").alias("lon"), F.col("p.lat").alias("lat"),
-        F.lit(False).alias("is_split"))
-    aug = pts.unionByName(splits.select(
-        "edge_key", "ord", "lon", "lat", F.lit(True).alias("is_split")))
-    w = Window.partitionBy("edge_key").orderBy("ord")
-    wend = Window.partitionBy("edge_key")
-    aug = aug.withColumns({
-        "is_vertex": (F.col("is_split")
-                      | (F.col("ord") == F.min("ord").over(wend))
-                      | (F.col("ord") == F.max("ord").over(wend))),
-    }).withColumn("vseq", F.sum(F.col("is_vertex").cast("int")).over(w))
-    head = aug.withColumn("seg", F.col("vseq") - 1)
-    tail = aug.filter("is_vertex").withColumn("seg", F.col("vseq") - 2)
-    both = head.unionByName(tail).filter(F.col("seg") >= 0)
-    seg_pts = (
-        both.groupBy("edge_key", "seg")
-        .agg(F.array_sort(F.collect_list(F.struct("ord", "lon", "lat"))).alias("pts"))
-        .filter(F.size("pts") >= 2)
-    )
-    first = F.element_at("pts", 1)
-    last = F.element_at("pts", -1)
-    mids = F.slice(F.col("pts"), 2, F.greatest(F.size("pts") - 2, F.lit(0)))
-    out = seg_pts.select(
+    """Rebuild every edge that has points in ``splits`` (edge_key, ord,
+    lon, lat) with them inserted as new vertices, flagged ``_changed``;
+    every other edge keeps its row, unflagged.
+
+    The G2 segmentation, done per row: each edge's split points arrive
+    as one list, the augmented point list is sorted by ``ord``, its ends
+    and split points are the vertices, and piece ``seg`` runs from vertex
+    ``seg`` to vertex ``seg + 1`` — one projection and one explode."""
+    cuts = splits.groupBy("edge_key").agg(F.collect_list(F.struct(
+        "ord", "lon", "lat", F.lit(True).alias("cut"))).alias("cuts"))
+    aug = edges.join(cuts, "edge_key", "left").withColumn(
+        "aug", F.when(F.col("cuts").isNotNull(), F.array_sort(F.concat(
+            F.transform(_points(), lambda p: p.withField("cut", F.lit(False))),
+            F.col("cuts")))))
+    aug = aug.withColumn("vidx", F.expr(
+        "filter(sequence(0, size(aug) - 1),"
+        " i -> aug[i].cut OR i IN (0, size(aug) - 1))"))
+    pieces = aug.select(*_EDGE_COLS, F.posexplode_outer(F.when(
+        F.col("cuts").isNotNull(), F.expr(
+            "transform(sequence(0, size(vidx) - 2),"
+            " j -> slice(aug, vidx[j] + 1, vidx[j + 1] - vidx[j] + 1))")))
+        .alias("seg", "p"))
+    # an unsplit edge (p null) passes through as piece a -> b = v1 -> v2
+    kept = F.col("p").isNull()
+    mids = F.slice("p", 2, F.greatest(F.size("p") - 2, F.lit(0)))
+    pieces = pieces.select(
         F.concat_ws("#", "edge_key", "seg").alias("edge_key"),
-        first["lon"].alias("a_lon"), first["lat"].alias("a_lat"),
-        last["lon"].alias("b_lon"), last["lat"].alias("b_lat"),
-        F.concat_ws(";", F.transform(
-            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))).alias("mid"))
-    fwd = F.col("a_lon") < F.col("b_lon")
+        F.coalesce(F.col("p")[0]["lon"], "v1_lon").alias("a_lon"),
+        F.coalesce(F.col("p")[0]["lat"], "v1_lat").alias("a_lat"),
+        F.coalesce(F.element_at("p", -1)["lon"], "v2_lon").alias("b_lon"),
+        F.coalesce(F.element_at("p", -1)["lat"], "v2_lat").alias("b_lat"),
+        F.when(kept, F.col("shape_pts")).otherwise(F.concat_ws(";", F.transform(
+            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))))
+        .alias("mid"),
+        (~kept).alias("_changed"))
+    # a rewritten piece is oriented west -> east; an unsplit edge keeps
+    # its orientation (the strict test would flip a vertical one)
+    fwd = ~F.col("_changed") | (F.col("a_lon") < F.col("b_lon"))
     rev = F.concat_ws(";", F.reverse(F.split(F.col("mid"), ";")))
-    return out.select(
+    return pieces.select(
         "edge_key",
         F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
         F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
         F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
         F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
         F.when(F.col("mid") == "", F.lit(None)).otherwise(
-            F.when(fwd, F.col("mid")).otherwise(rev)).alias("shape_pts"))
+            F.when(fwd, F.col("mid")).otherwise(rev)).alias("shape_pts"),
+        "_changed")
 
 
 def planarize(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
     """Iterate find-intersections / split until planar (bounded rounds).
 
     ``edges`` columns: edge_key string + endpoint/shape columns as in
-    graph_build output.  Scale: each round is one cell-keyed self-join —
-    no driver-side geometry."""
-    cur = edges
-    for _ in range(max_rounds):
-        splits = find_intersections(cur).localCheckpoint()
-        if splits.isEmpty():
-            break
-        # localCheckpoint truncates the per-round plan lineage (each round
-        # nests explode/window/group over the previous one); production
-        # pipelines checkpoint to storage via plans.lineage.LineageStore
-        cur = split_edges_at(cur, splits).localCheckpoint()
-    return cur
+    graph_build output.  Each round (``plans.lineage.fixpoint``) is one
+    cell-keyed self-join — no driver-side geometry — that rewrites only
+    the edges with split points (flagged ``_changed``); every other edge
+    keeps its row, key and orientation.  The loop stops on the first
+    round that splits nothing, so pre-noded input costs one round and
+    comes back as it went in."""
+    return fixpoint(lambda cur: split_edges_at(cur, find_intersections(cur)),
+                    edges, max_rounds, "planarize")

@@ -24,9 +24,9 @@ With Iceberg jars on the classpath the same API maps onto real Iceberg
 snapshot commits; this parquet implementation is the in-sandbox fallback.
 
 The in-memory counterparts live here too: ``cut_lineage`` is the
-per-round lineage cut every iterative loop uses, and
-``ensure_metrics_survive`` keeps ``df.observe`` counters alive on empty
-inputs.
+per-round lineage cut, ``fixpoint`` the one run-until-nothing-changes
+loop built on it, and ``ensure_metrics_survive`` keeps ``df.observe``
+counters alive on empty inputs.
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ import time
 import uuid
 import warnings
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -115,6 +116,26 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
                 f"localCheckpoint, so self-joining loops may square their "
                 f"size estimate every round", RuntimeWarning, stacklevel=2)
         return ck
+
+
+def fixpoint(step: Callable[[DataFrame], DataFrame], state: DataFrame,
+             max_rounds: int, name: str) -> DataFrame:
+    """Run ``state = cut_lineage(step(state))`` until a round changes
+    nothing.  ``step`` returns the next state with a boolean ``_changed``
+    column; the loop stops on the first round whose checkpoint has no
+    ``_changed`` row, read by one narrow ``filter(_changed).isEmpty()``
+    (no shuffle, no join of two rounds, no ``Observation``).  Reaching
+    ``max_rounds`` first warns and returns the last round's state.  The
+    result never carries ``_changed``."""
+    for _ in range(max_rounds):
+        state = cut_lineage(step(state))
+        if state.filter("_changed").isEmpty():
+            return state.drop("_changed")
+    warnings.warn(
+        f"{name} stopped at max_rounds={max_rounds} before converging; "
+        f"its result is the state after the last round", RuntimeWarning,
+        stacklevel=2)
+    return state.drop("_changed")
 
 
 def _have_iceberg(spark: SparkSession) -> bool:
