@@ -51,7 +51,10 @@ def test_split_edges_count_and_orientation(grid):
 
 def test_faces_grid(spark, grid):
     nodes, ways = grid
+    spark.catalog.clearCache()
     faces = build_faces(barrier_edges(nodes, ways)).toPandas()
+    # the build caches nothing that would outlive its DataFrames
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # (k-1)^2 interior cells + 1 exterior ring face
     assert len(faces) == (K - 1) ** 2 + 1
     assert faces.face_guid.nunique() == len(faces)
@@ -99,14 +102,13 @@ def test_graph_tables_guids_and_roundtrip(spark, tmp_path):
     (Serialization/TiledBarrierGraphSerializer.cs:14-85): vertex GUID set
     matches the closed-form lattice expectation, edge ids are distinct and
     reference existing vertices, a straight edge's id reproduces from its
-    raw point sequence, and the LineageStore roundtrip GUID-dedups on read
-    (TiledPolygonGraphExtensions.cs:17-119)."""
+    raw point sequence, and a LineageStore commit reads back the same GUID
+    sets."""
     import numpy as np
 
     from urbanistic_polygons_spark import kernels
     from urbanistic_polygons_spark.operators.graph_build import (
-        build_graph_tables, checkpoint_graph, read_graph,
-    )
+        build_graph_tables)
     from urbanistic_polygons_spark.plans.lineage import LineageStore
 
     nodes_pdf, ways_pdf = datagen.gen_ways_grid(k=K, seed=44, jitter=0.0)
@@ -150,9 +152,10 @@ def test_graph_tables_guids_and_roundtrip(spark, tmp_path):
     tid = kernels.tile_local_id(tx, ty)
     assert kernels.edge_guid(np.stack([qx, qy, tid], axis=1)) in set(ep.edge_guid)
 
-    # checkpoint -> read roundtrip preserves the GUID sets exactly
+    # commit -> read roundtrip (as the graph pipeline commits its stage 1)
+    # preserves the GUID sets exactly
     store = LineageStore(str(tmp_path / "g"))
-    checkpoint_graph(store, vertices, edges)
-    rv, re = read_graph(store)
+    rv = store.checkpoint(vertices, "graph_vertices", "tile_id")
+    re = store.checkpoint(edges, "graph_edges", "v1_tile")
     assert set(rv.toPandas().vertex_guid) == exp
     assert set(re.toPandas().edge_guid) == set(ep.edge_guid)

@@ -159,15 +159,21 @@ def _sssp_capped(spark):
     assert {r.node: r.dist for r in out.collect()} == {0: 0, 1: 1}
 
 
+_EDGE_SCHEMA = (
+    "way_id long, seg long, tag_sig string, v1_lon double, v1_lat double, "
+    "v2_lon double, v2_lat double, shape_pts string, min_lon double, "
+    "min_lat double, max_lon double, max_lat double")
+
+
 def _planarize_capped(spark):
     # two crossing edges split in round 1; the cap leaves no round to
     # confirm that the pieces are planar
     from urbanistic_polygons_spark.operators.planarize import planarize
     edges = spark.createDataFrame(
-        [("a", 4.78, 51.26, 4.784, 51.264, None),
-         ("b", 4.78, 51.264, 4.784, 51.26, None)],
-        "edge_key string, v1_lon double, v1_lat double, "
-        "v2_lon double, v2_lat double, shape_pts string")
+        [(1, 0, "1", 4.78, 51.26, 4.784, 51.264, None,
+          4.78, 51.26, 4.784, 51.264),
+         (2, 0, "2", 4.78, 51.264, 4.784, 51.26, None,
+          4.78, 51.26, 4.784, 51.264)], _EDGE_SCHEMA)
     assert planarize(edges, max_rounds=1).count() == 4
 
 
@@ -176,9 +182,8 @@ def _prune_capped(spark):
     from urbanistic_polygons_spark.operators.graph_build import (
         prune_shape_points)
     edges = spark.createDataFrame(
-        [(7, i, float(i), 0.0, float(i + 1), 0.0, None) for i in range(4)],
-        "way_id long, seg long, v1_lon double, v1_lat double, "
-        "v2_lon double, v2_lat double, shape_pts string")
+        [(7, i, "7", float(i), 0.0, float(i + 1), 0.0, None,
+          float(i), 0.0, float(i + 1), 0.0) for i in range(4)], _EDGE_SCHEMA)
     assert prune_shape_points(edges, max_rounds=1).count() < 4
 
 
@@ -194,6 +199,78 @@ def test_fixpoint_round_cap_warns(spark, name):
     instead of silently returning a non-converged result."""
     with pytest.warns(RuntimeWarning, match=f"{name} stopped at max_rounds="):
         _CAPPED[name](spark)
+
+
+def _components_rounds(spark):
+    from pyspark.sql import functions as F
+
+    from urbanistic_polygons_spark.operators.dedup import near_dup_components
+    pairs = spark.range(39).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+    assert near_dup_components(pairs).filter("component != 0").isEmpty()
+
+
+def _sssp_rounds(spark):
+    from urbanistic_polygons_spark.operators.graph_algos import sssp_int
+    edges = spark.createDataFrame([(i, i + 1, 1) for i in range(5)],
+                                  "src long, dst long, w long")
+    assert {r.node: r.dist for r in sssp_int(edges, 0).collect()} == {
+        i: i for i in range(6)}
+
+
+def _planarize_rounds(spark):
+    # round 1 splits way 1 at way 3; re-writing way 1's shape point with
+    # nine decimals lowers it by 4e-10, so in round 2 its piece crosses
+    # way 2, whose top stopped 3e-10 above the parallel: round 3 confirms
+    from urbanistic_polygons_spark.operators.planarize import planarize
+    lat = 51.26
+    edges = spark.createDataFrame(
+        [(1, 0, "1", 4.780, lat, 4.782, lat, "4.781000000 51.2600000004",
+          4.780, lat, 4.782, lat + 4e-10),
+         (2, 0, "2", 4.7812, lat - 1e-3, 4.7812, lat + 3e-10, None,
+          4.7812, lat - 1e-3, 4.7812, lat + 3e-10),
+         (3, 0, "3", 4.7805, lat - 1e-3, 4.7805, lat + 1e-3, None,
+          4.7805, lat - 1e-3, 4.7805, lat + 1e-3)], _EDGE_SCHEMA)
+    out = planarize(edges).filter("way_id = 1").orderBy("seg").collect()
+    assert [r.seg for r in out] == [0, 1, 2]
+    assert [r.v1_lon for r in out] == pytest.approx([4.780, 4.7805, 4.7812])
+
+
+def _prune_rounds(spark):
+    edges = spark.createDataFrame(
+        [(7, i, "7", float(i), 0.0, float(i + 1), 0.0, None,
+          float(i), 0.0, float(i + 1), 0.0) for i in range(16)], _EDGE_SCHEMA)
+    from urbanistic_polygons_spark.operators.graph_build import (
+        prune_shape_points)
+    assert prune_shape_points(edges).count() == 1
+
+
+_ROUNDS = {"near_dup_components": _components_rounds,
+           "sssp_int": _sssp_rounds,
+           "planarize": _planarize_rounds,
+           "prune_shape_points": _prune_rounds}
+
+
+@pytest.mark.parametrize("name", list(_ROUNDS))
+def test_fixpoint_round3_size_estimate_reset(spark, monkeypatch, name):
+    """Every run-until-nothing-changes loop cuts its lineage with
+    ``cut_lineage``: the state of round 3 estimates its size as
+    ``spark.sql.defaultSizeInBytes``, not as an inherited estimate that
+    a self-joining round would square."""
+    from urbanistic_polygons_spark.plans import lineage
+    states = []
+    real = lineage.cut_lineage
+
+    def recording(df, eager=True):
+        states.append(real(df, eager))
+        return states[-1]
+    monkeypatch.setattr(lineage, "cut_lineage", recording)
+    _ROUNDS[name](spark)
+    assert len(states) >= 3, len(states)
+    size = states[2]._jdf.queryExecution().optimizedPlan().stats() \
+        .sizeInBytes()
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    assert int(str(size)) == int(default)
 
 
 def test_winnow_fingerprints_semantics(spark):

@@ -637,6 +637,33 @@ def test_lineage_empty_first_commit(spark, tmp_path):
     assert store.snapshots("s")[-1]["added_partitions"] == [0, 1]
 
 
+@pytest.mark.parametrize("prev", [
+    None, "org.apache.spark.sql.execution.adaptive.DynamicJoinSelection"])
+def test_lineage_checkpoint_restores_excluded_rules(spark, tmp_path, prev):
+    """A checkpoint excludes AQEPropagateEmptyRelation for its own write
+    (its counters survive an empty input) and puts the session's previous
+    AQE rule exclusions back afterwards, unset or not."""
+    from urbanistic_polygons_spark.plans.lineage import LineageStore
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    saved = spark.conf.get(key, None)
+    try:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+        store = LineageStore(str(tmp_path / "ckpt"))
+        empty = spark.range(20).withColumn("part", F.col("id") % 2) \
+            .filter(F.lit(False))
+        assert store.checkpoint(empty, "s", "part").count() == 0
+        assert store.snapshots("s")[-1]["rows_added"] == 0
+        assert spark.conf.get(key, None) == prev
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
 def test_lineage_compact_updates_counters_and_expires_as_of(spark, tmp_path):
     """compact() must keep the legacy counters file in step (ADVICE r3:
     current_snapshot pointed at a deleted commit id) and reads as-of a

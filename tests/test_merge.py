@@ -143,13 +143,43 @@ def test_dominance_gate_splits_regions(lattice):
 
 # Spark jobs of one k=4 build in this session (cores=4, 8 shuffle
 # partitions, AQEPropagateEmptyRelation excluded up front), counted
-# through a job group.  Measured with every fixpoint loop on
-# plans.lineage.fixpoint: 142-143 fresh / 148-149 resume, alone or after
-# the other tests of this module; the spread is AQE submitting its query
-# stages as jobs in a timing-dependent grouping.  The ceilings add two
-# jobs for it and stay below the parent's 149 / 155 with per-round
-# probes: a loop that adds a probe job per round fails here.
-GRAPH_BUILD_JOBS = {"fresh": 145, "resume": 151}
+# through a job group.  Measured with the barrier edges derived in one
+# pass (planarize carries tag_sig, so split_ways_to_edges' plan runs
+# once): 134-135 fresh / 140-141 resume, down from 142-143 / 148-149
+# when the tag_sig join-back ran the split a second time.  The ceilings
+# add two jobs for AQE submitting its query stages as jobs in a
+# timing-dependent grouping: a loop that adds a probe job per round, or
+# a second derivation of the split edges, fails here.
+GRAPH_BUILD_JOBS = {"fresh": 137, "resume": 143}
+# the planar edge set alone, barrier_edges(...).localCheckpoint(eager=True)
+# at k=4: 21 jobs (30 with the tag_sig join-back)
+BARRIER_EDGES_JOBS = 23
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` in job group ``group``; returns (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_barrier_edges_job_ceiling(spark, lattice):
+    """The planar barrier edges of a k=4 build are derived in one pass:
+    no second run of the way -> edge split to re-attach ``tag_sig``."""
+    import uuid
+
+    from urbanistic_polygons_spark.plans.lineage import ensure_metrics_survive
+    nodes, ways, _ = lattice
+    ensure_metrics_survive(spark.range(1))
+    edges, jobs = _jobs_in_group(
+        spark, f"barrier_edges_{uuid.uuid4().hex[:8]}",
+        lambda: barrier_edges(nodes, ways).localCheckpoint(eager=True))
+    assert edges.count() == 2 * 4 * 3 + 1        # lattice segments + spur
+    assert jobs <= BARRIER_EDGES_JOBS, jobs
 
 
 def test_graph_pipeline_stages_and_resume(spark, tmp_path, monkeypatch):
@@ -182,22 +212,18 @@ def test_graph_pipeline_stages_and_resume(spark, tmp_path, monkeypatch):
     count_calls(planarize, "planarize")
     once = {"split_ways_to_edges": 1, "planarize": 1}
 
-    # plan both builds as after an observed job (the first checkpoint
-    # excludes AQEPropagateEmptyRelation for the rest of the session), so
-    # the job count does not depend on what earlier tests ran
+    # plan both builds as after an observed dedup query (which excludes
+    # AQEPropagateEmptyRelation for the rest of the session), so the job
+    # count does not depend on what earlier tests ran
     from urbanistic_polygons_spark.plans.lineage import ensure_metrics_survive
     ensure_metrics_survive(spark.range(1))
-    sc = spark.sparkContext
     jobs = {}
 
     def run(name):
-        group = f"graph_build_{name}_{tmp_path.name}"
-        sc.setJobGroup(group, group)
-        try:
-            return P.run(spark, str(tmp_path / "graph_wd"), k=4)
-        finally:
-            sc._jsc.clearJobGroup()
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        out, jobs[name] = _jobs_in_group(
+            spark, f"graph_build_{name}_{tmp_path.name}",
+            lambda: P.run(spark, str(tmp_path / "graph_wd"), k=4))
+        return out
 
     r1 = run("fresh")
     assert calls == once, calls
@@ -224,7 +250,7 @@ def test_crossing_ways_boundary_segments_match(spark):
     leaves those keys unmatched (merge fails safe = blocked); fed
     PLANARIZED edges (the pipeline's stage-4 form) every boundary
     segment matches and the residential triangles merge."""
-    from urbanistic_polygons_spark.operators.graph_build import planarize_edges
+    from urbanistic_polygons_spark.operators.planarize import planarize
 
     b_lon, b_lat, s = 4.78, 51.26, 0.004
     nodes = spark.createDataFrame(
@@ -252,7 +278,7 @@ def test_crossing_ways_boundary_segments_match(spark):
     raw_merged = merge_faces(faces, res_raw, threshold=3)
     assert raw_merged.select("region").distinct().count() == 4
 
-    res_pl = segment_resistance(planarize_edges(edges_raw), way_res)
+    res_pl = segment_resistance(planarize(edges_raw), way_res)
     assert segs.join(res_pl, "seg_key", "left_anti").count() == 0
     merged = merge_faces(faces, res_pl, threshold=3)
     assert merged.select("region").distinct().count() == 1

@@ -5,20 +5,20 @@ from pyspark.sql import functions as F
 
 from urbanistic_polygons_spark.operators.graph_build import prune_shape_points
 
-COLS = ("way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat",
-        "shape_pts", "min_lon", "min_lat", "max_lon", "max_lat")
-
 
 def _edges(spark, rows):
+    """Barrier-edge rows; ``tag_sig`` is the way id (same-way edges
+    share tags)."""
     full = []
     for way_id, seg, v1, v2, shape in rows:
         lons = [v1[0], v2[0]] + [p[0] for p in shape]
         lats = [v1[1], v2[1]] + [p[1] for p in shape]
         shape_str = ";".join(f"{p[0]:.9f} {p[1]:.9f}" for p in shape) or None
-        full.append((way_id, seg, v1[0], v1[1], v2[0], v2[1], shape_str,
-                     min(lons), min(lats), max(lons), max(lats)))
+        full.append((way_id, seg, str(way_id), v1[0], v1[1], v2[0], v2[1],
+                     shape_str, min(lons), min(lats), max(lons), max(lats)))
     return spark.createDataFrame(
-        full, "way_id long, seg long, v1_lon double, v1_lat double, "
+        full, "way_id long, seg long, tag_sig string, "
+              "v1_lon double, v1_lat double, "
               "v2_lon double, v2_lat double, shape_pts string, "
               "min_lon double, min_lat double, max_lon double, max_lat double")
 
@@ -61,7 +61,7 @@ def test_different_ways_not_merged(spark):
 
 def test_cross_way_equal_tags_merge(spark):
     # degree-2 vertex shared by two WAYS with IDENTICAL tag collections:
-    # with a tag_sig column the chain contracts across the way boundary
+    # the chain contracts across the way boundary
     # (reference merges on tag-collection equality, not way identity)
     e = _edges(spark, [
         (1, 0, (0.0, 0.0), (1.0, 0.0), []),

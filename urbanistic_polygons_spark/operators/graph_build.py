@@ -12,7 +12,8 @@ the reference's imperative builder:
                         (TiledBarrierGraphBuilder.cs:197-259)
 - G5 standardize:       orient every edge west->east, reversing the shape —
                         load-order independence (TiledBarrierGraphExtensions
-                        .cs:299-318)
+                        .cs:299-318); one rule, ``west_to_east``, for the
+                        split, the G4 merge and the J4 planarize pieces
 - S3 cell bucketing:    edges replicated to every halo cell of the anchor
                         cells their bbox covers (tools/.../Program.cs:43-147
                         pass-1/pass-2 ingest, but as one shuffle)
@@ -82,11 +83,81 @@ def tag_signature(tags_col) -> F.Column:
         lambda e: F.concat_ws("=", e["key"], e["value"])))))
 
 
+def polyline(pts: str) -> dict:
+    """The point array column ``pts`` (v1 first) as the columns
+    ``west_to_east`` reads: its ends a, b and the ``'lon lat;...'`` text
+    of the points between them."""
+    first, last = F.element_at(pts, 1), F.element_at(pts, -1)
+    mids = F.slice(pts, 2, F.greatest(F.size(pts) - 2, F.lit(0)))
+    return {"a_lon": first["lon"], "a_lat": first["lat"],
+            "b_lon": last["lon"], "b_lat": last["lat"],
+            "mid_str": F.concat_ws(";", F.transform(
+                mids, lambda p: F.format_string("%.9f %.9f",
+                                                p["lon"], p["lat"])))}
+
+
+def edge_points() -> F.Column:
+    """The one parse of an edge row's geometry: v1, the ``shape_pts``
+    points, v2 as ``array<struct<ord double, lon, lat>>`` (``ord`` is the
+    point's index along v1 -> v2)."""
+    mids = F.when(
+        F.col("shape_pts").isNotNull() & (F.col("shape_pts") != ""),
+        F.transform(
+            F.split("shape_pts", ";"),
+            lambda p, i: F.struct(
+                (i + 1).cast("double").alias("ord"),
+                F.split(p, " ").getItem(0).cast("double").alias("lon"),
+                F.split(p, " ").getItem(1).cast("double").alias("lat")))
+    ).otherwise(F.array())
+    head = F.array(F.struct(F.lit(0.0).alias("ord"),
+                            F.col("v1_lon").alias("lon"),
+                            F.col("v1_lat").alias("lat")))
+    npts = F.size(mids) + 1
+    tail = F.array(F.struct(npts.cast("double").alias("ord"),
+                            F.col("v2_lon").alias("lon"),
+                            F.col("v2_lat").alias("lat")))
+    return F.concat(head, mids, tail)
+
+
+def bbox_of(pts: str) -> dict:
+    """min_lon..max_lat over the ``lon``/``lat`` fields of the point array
+    column ``pts``."""
+    return {"min_lon": F.array_min(f"{pts}.lon"),
+            "min_lat": F.array_min(f"{pts}.lat"),
+            "max_lon": F.array_max(f"{pts}.lon"),
+            "max_lat": F.array_max(f"{pts}.lat")}
+
+
+def west_to_east() -> dict:
+    """G5 standardize: the edge a -> b through the ``mid_str`` points
+    (columns ``a_lon, a_lat, b_lon, b_lat, mid_str``) as ``v1_lon..v2_lat,
+    shape_pts`` with v1 the western end, the shape reversed with it —
+    load-order independence (TiledBarrierGraphExtensions.cs:299-318).  An
+    edge with ``a_lon == b_lon`` runs b -> a."""
+    fwd = F.col("a_lon") < F.col("b_lon")
+    return {
+        "v1_lon": F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")),
+        "v1_lat": F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")),
+        "v2_lon": F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")),
+        "v2_lat": F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")),
+        "shape_pts": F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
+            F.when(fwd, F.col("mid_str")).otherwise(
+                _reverse_shape(F.col("mid_str")))),
+    }
+
+
+def _reverse_shape(shape: F.Column) -> F.Column:
+    """``shape_pts`` text with its points in reverse order (null stays
+    null)."""
+    return F.when(shape.isNull(), F.lit(None)).otherwise(
+        F.concat_ws(";", F.reverse(F.split(shape, ";"))))
+
+
 def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """G2 + G5: barrier ways -> standardized edges.
 
-    Output: (way_id, seg, tag_sig, v1_lon, v1_lat, v2_lon, v2_lat,
-             shape_pts string 'lon lat;...', min_lon..max_lat bbox).
+    Output: (way_id, seg, v1_lon, v1_lat, v2_lon, v2_lat,
+             shape_pts string 'lon lat;...', min_lon..max_lat bbox, tag_sig).
     """
     ways = ways.withColumn("tag_sig", tag_signature(F.col("tags")))
     wn = resolve_way_nodes(nodes, ways)
@@ -109,54 +180,14 @@ def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("pts"))
         .filter(F.size("pts") >= 2)
     )
-    first = F.element_at("pts", 1)
-    last = F.element_at("pts", -1)
-    mids = F.slice(F.col("pts"), 2, F.greatest(F.size("pts") - 2, F.lit(0)))
-    edges = seg_pts.select(
-        "way_id", "seg",
-        first["lon"].alias("a_lon"), first["lat"].alias("a_lat"),
-        last["lon"].alias("b_lon"), last["lat"].alias("b_lat"),
-        F.concat_ws(";", F.transform(
-            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))).alias("mid_str"),
-        F.transform("pts", lambda p: p["lon"]).alias("all_lons"),
-        F.transform("pts", lambda p: p["lat"]).alias("all_lats"),
-    )
-    # G5 standardize: v1 = western endpoint; reverse shape when swapping
-    fwd = F.col("a_lon") < F.col("b_lon")
-    rev_mid = F.concat_ws(";", F.reverse(F.split(F.col("mid_str"), ";")))
-    edges = edges.select(
-        "way_id", "seg",
-        F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-        F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-        F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-        F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-        F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
-            F.when(fwd, F.col("mid_str")).otherwise(rev_mid)).alias("shape_pts"),
-        F.array_min("all_lons").alias("min_lon"),
-        F.array_min("all_lats").alias("min_lat"),
-        F.array_max("all_lons").alias("max_lon"),
-        F.array_max("all_lats").alias("max_lat"),
-    )
+    edges = (seg_pts.withColumns(polyline("pts"))
+             .withColumns(west_to_east()).withColumns(bbox_of("pts")))
     # attach the per-way tag signature (G4 merge equality key): way_id is
     # the join key on both sides, so AQE co-partitions this cheaply
-    return edges.join(ways.select("way_id", "tag_sig"), "way_id")
-
-
-def _bbox_cols() -> list:
-    """min_lon..max_lat over both endpoints plus the ``shape_pts`` points."""
-    shape_tokens = F.filter(
-        F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-        lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
-    shape_lons = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[0].cast("double"))
-    shape_lats = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[1].cast("double"))
-    all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
-    all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
-    return [F.array_min(all_lons).alias("min_lon"),
-            F.array_min(all_lats).alias("min_lat"),
-            F.array_max(all_lons).alias("max_lon"),
-            F.array_max(all_lats).alias("max_lat")]
+    return edges.select(
+        "way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts",
+        "min_lon", "min_lat", "max_lon", "max_lat",
+    ).join(ways.select("way_id", "tag_sig"), "way_id")
 
 
 def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
@@ -165,10 +196,8 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     reference TiledBarrierGraphExtensions.cs:214-255.
 
     Merge condition: equal tag COLLECTIONS via the ``tag_sig`` column
-    (tag_signature) when present — so chains crossing WAY boundaries with
-    identical tags contract, exactly like the reference; without a
-    ``tag_sig`` column the way_id approximates it (same-way edges always
-    share tags).
+    (tag_signature) — so chains crossing WAY boundaries with identical
+    tags contract, exactly like the reference.
 
     Round-based chain contraction: each round merges a conflict-free set of
     degree-2 vertices (an edge merges only at the vertex that is its
@@ -181,23 +210,22 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     vkey2 = F.format_string("%.9f %.9f", F.col("v2_lon"), F.col("v2_lat"))
     ekey = F.format_string("%s#%s", F.col("way_id").cast("string"),
                            F.col("seg").cast("string"))
-    has_sig = "tag_sig" in edges.columns
-    sig = F.col("tag_sig") if has_sig else F.col("way_id").cast("string")
     cols = edges.columns
 
     def step(edges):
         e = edges.select(*cols).withColumn("ekey", ekey).withColumn(
-            "vk1", vkey1).withColumn("vk2", vkey2).withColumn("sig", sig)
+            "vk1", vkey1).withColumn("vk2", vkey2)
         not_loop = e.filter(F.col("vk1") != F.col("vk2"))
         ends = not_loop.select(
-            F.col("vk1").alias("vk"), F.struct("ekey", "sig").alias("inc")
+            F.col("vk1").alias("vk"), F.struct("ekey", "tag_sig").alias("inc")
         ).unionByName(not_loop.select(
-            F.col("vk2").alias("vk"), F.struct("ekey", "sig").alias("inc")))
+            F.col("vk2").alias("vk"), F.struct("ekey", "tag_sig").alias("inc")))
         cand = (ends.groupBy("vk")
                 .agg(F.array_sort(F.collect_list("inc")).alias("incs"))
                 .filter((F.size("incs") == 2)
                         & (F.col("incs")[0]["ekey"] != F.col("incs")[1]["ekey"])
-                        & (F.col("incs")[0]["sig"] == F.col("incs")[1]["sig"]))
+                        & (F.col("incs")[0]["tag_sig"]
+                           == F.col("incs")[1]["tag_sig"]))
                 .select("vk", F.col("incs")[0]["ekey"].alias("e1"),
                         F.col("incs")[1]["ekey"].alias("e2")))
         # conflict-free: an edge participates only at its smallest cand vk
@@ -221,17 +249,15 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
         far_lat = F.when(at_v2, F.col("v1_lat")).otherwise(F.col("v2_lat"))
         # shape oriented far -> vk
         shp = F.when(at_v2, F.col("shape_pts")).otherwise(
-            F.when(F.col("shape_pts").isNull(), F.lit(None)).otherwise(
-                F.concat_ws(";", F.reverse(F.split(F.col("shape_pts"), ";")))))
-        m = m.select("vk", "side", "way_id", "seg", "sig",
+            _reverse_shape(F.col("shape_pts")))
+        m = m.select("vk", "side", "way_id", "seg", "tag_sig",
                      far_lon.alias("f_lon"), far_lat.alias("f_lat"),
                      shp.alias("shp"))
+        side = ("f_lon", "f_lat", "shp", "way_id", "seg", "tag_sig")
         merged = (
             m.groupBy("vk")
-            .agg(F.min(F.when(F.col("side") == 1, F.struct(
-                "f_lon", "f_lat", "shp", "way_id", "seg", "sig"))).alias("a"),
-                 F.min(F.when(F.col("side") == 2, F.struct(
-                     "f_lon", "f_lat", "shp", "way_id", "seg", "sig"))).alias("b"))
+            .agg(F.min(F.when(F.col("side") == 1, F.struct(*side))).alias("a"),
+                 F.min(F.when(F.col("side") == 2, F.struct(*side))).alias("b"))
             .select(
                 # the merged edge takes side a's identity: (a.way_id, a.seg)
                 # is freed by consuming a, and — unlike least(a.seg, b.seg) —
@@ -239,29 +265,17 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                 # from DIFFERENT ways (cross-way merge under tag equality)
                 F.col("a.way_id").alias("way_id"),
                 F.col("a.seg").alias("seg"),
-                F.col("a.sig").alias("sig"),
+                F.col("a.tag_sig").alias("tag_sig"),
                 F.col("a.f_lon").alias("a_lon"), F.col("a.f_lat").alias("a_lat"),
                 F.col("b.f_lon").alias("b_lon"), F.col("b.f_lat").alias("b_lat"),
                 # a.shp (a->vk) + vk + reverse(b.shp) (vk->b)
                 F.concat_ws(";", F.filter(F.array(
-                    F.col("a.shp"), F.col("vk"),
-                    F.when(F.col("b.shp").isNull(), F.lit(None)).otherwise(
-                        F.concat_ws(";", F.reverse(F.split(F.col("b.shp"), ";"))))
+                    F.col("a.shp"), F.col("vk"), _reverse_shape(F.col("b.shp"))
                 ), lambda x: x.isNotNull())).alias("mid_str"))
         )
-        fwd = F.col("a_lon") < F.col("b_lon")
-        rev_mid = F.concat_ws(";", F.reverse(F.split(F.col("mid_str"), ";")))
-        sig_cols = [F.col("sig").alias("tag_sig")] if has_sig else []
-        new_edges = merged.select(
-            "way_id", "seg", *sig_cols,
-            F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-            F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-            F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-            F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-            F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
-                F.when(fwd, F.col("mid_str")).otherwise(rev_mid)).alias("shape_pts"),
-        )
-        new_edges = new_edges.select("*", *_bbox_cols())
+        new_edges = (merged.withColumns(west_to_east())
+                     .withColumn("pts", edge_points())
+                     .withColumns(bbox_of("pts")))
         dropped = (sides.select("ekey").distinct())
         survivors = e.join(dropped, "ekey", "left_anti").select(*cols)
         # merged edges are this round's change; a round with no
@@ -303,44 +317,14 @@ def bucket_edges_by_cell(edges: DataFrame, halo_ring: int = 1) -> DataFrame:
     return out
 
 
-def planarize_edges(edges: DataFrame) -> DataFrame:
-    """J4 wiring for the way/seg edge schema: split non-noded crossings
-    via operators/planarize, then restore (way_id, seg) identity (seg is
-    re-numbered densely per way, deterministic by split key) and the bbox
-    columns.  OSM data is mostly pre-noded; this is the guard for inputs
-    that are not (reference planarizes every added edge,
-    TiledBarrierGraphExtensions.cs:39-137)."""
-    from .planarize import planarize as _planarize
-
-    # the first round reads its input twice (intersection self-join and
-    # split join): derive it once
-    keyed = edges.select(
-        F.format_string("%d#%d", F.col("way_id"), F.col("seg")).alias("edge_key"),
-        "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"
-    ).localCheckpoint(eager=False)
-    flat = _planarize(keyed)
-    w = Window.partitionBy("way_id").orderBy("edge_key")
-    out = (flat
-           .withColumn("way_id",
-                       F.split("edge_key", "#").getItem(0).cast("long"))
-           .withColumn("seg", F.row_number().over(w) - 1)
-           .drop("edge_key"))
-    flat_edges = out.select(
-        "way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts",
-        *_bbox_cols())
-    if "tag_sig" in edges.columns:  # re-attach the per-way G4 signature
-        flat_edges = flat_edges.join(
-            edges.select("way_id", "tag_sig").distinct(), "way_id")
-    return flat_edges
-
-
 def barrier_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """The planar barrier edge set of one graph build: F1 classify -> G2/G5
     split -> J4 planarize.  Graph tables, faces and merge resistance all
     take this one edge set (the reference runs faces and landuse on the
     same planarized tile graph), so merge boundary segments match the face
     boundaries by construction."""
-    return planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
+    from .planarize import planarize
+    return planarize(split_ways_to_edges(nodes, classify_barriers(ways)))
 
 
 GRAPH_EDGES_SCHEMA = (
@@ -426,27 +410,6 @@ def build_graph_tables(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return vertices, g_edges
 
 
-def checkpoint_graph(store, vertices: DataFrame, edges: DataFrame,
-                     stage_prefix: str = "graph"):
-    """S4 for the entity tables: snapshot-commit vertices/edges through the
-    LineageStore partitioned by tile, returning the manifest-scoped
-    GUID-deduped read-back (resume re-processes only uncommitted tiles)."""
-    v = store.checkpoint(vertices, f"{stage_prefix}_vertices", "tile_id")
-    e = store.checkpoint(edges, f"{stage_prefix}_edges", "v1_tile")
-    return (v.dropDuplicates(["vertex_guid"]),
-            e.dropDuplicates(["edge_guid"]))
-
-
-def read_graph(store, stage_prefix: str = "graph"):
-    """Read the checkpointed entity tables with cross-tile GUID dedup —
-    the reference dedups vertices/edges when composing tiles on read
-    (TiledPolygonGraphExtensions.cs:17-119)."""
-    return (store.read(f"{stage_prefix}_vertices")
-            .dropDuplicates(["vertex_guid"]),
-            store.read(f"{stage_prefix}_edges")
-            .dropDuplicates(["edge_guid"]))
-
-
 def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
     """Barrier edges (barrier_edges) -> per-cell face polygons with
     content-addressed GUIDs, cross-cell dedup'd.
@@ -455,12 +418,15 @@ def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
     halo (sentinel rows from the kernel) are retried with a 1-bigger halo —
     the Spark analog of the reference's load-missing-tiles-and-retry loop
     (TiledBarrierGraphBuilder.cs:53-61), but as one extra shuffle per round
-    over only the failed anchors instead of per-tile lazy I/O.
+    over only the failed anchors instead of per-tile lazy I/O.  The faces
+    come back checkpointed, with no cached table left behind.
     """
     from .faces import extract_faces
 
+    # every ring re-reads the edges and its own kernel output; both stay
+    # cached only until the faces are materialized below
     edges = edges.cache()
-
+    cached = [edges]
     results = []
     retry_anchors = None  # None = all anchors (round 1)
     for ring in range(1, max_ring + 1):
@@ -469,6 +435,7 @@ def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
             bucketed = bucketed.join(F.broadcast(retry_anchors),
                                      "anchor_cell", "left_semi")
         out = extract_faces(bucketed).cache()
+        cached.append(out)
         results.append(out.filter(F.col("face_guid").isNotNull()))
         retry_anchors = (out.filter(F.col("face_guid").isNull())
                          .select("anchor_cell").distinct())
@@ -490,4 +457,10 @@ def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
     faces = results[0]
     for r in results[1:]:
         faces = faces.unionByName(r)
-    return faces.dropDuplicates(["face_guid"])
+    # a face found from several anchors keeps the first copy the dedup
+    # meets, so it reads the cached kernel output (one partition per
+    # shuffle partition); the caches go once the faces are checkpointed
+    faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    return faces

@@ -22,50 +22,32 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
 from ..plans.lineage import fixpoint
+from .graph_build import bbox_of, edge_points, polyline, west_to_east
 
-_EDGE_COLS = ["edge_key", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"]
-
-
-def _points() -> F.Column:
-    """edge -> ordered point list array<struct<ord double, lon, lat>>."""
-    mids = F.when(
-        F.col("shape_pts").isNotNull() & (F.col("shape_pts") != ""),
-        F.transform(
-            F.split("shape_pts", ";"),
-            lambda p, i: F.struct(
-                (i + 1).cast("double").alias("ord"),
-                F.split(p, " ").getItem(0).cast("double").alias("lon"),
-                F.split(p, " ").getItem(1).cast("double").alias("lat")))
-    ).otherwise(F.array())
-    head = F.array(F.struct(F.lit(0.0).alias("ord"),
-                            F.col("v1_lon").alias("lon"),
-                            F.col("v1_lat").alias("lat")))
-    npts = F.size(mids) + 1
-    tail = F.array(F.struct(npts.cast("double").alias("ord"),
-                            F.col("v2_lon").alias("lon"),
-                            F.col("v2_lat").alias("lat")))
-    return F.concat(head, mids, tail)
+# an edge's identity inside the loop: its (way_id, seg) and, once split,
+# the piece path inside that seg (one index per round that split it)
+_KEY = ["way_id", "seg", "_piece"]
 
 
 def _segments(edges: DataFrame) -> DataFrame:
     """One row per consecutive point pair, with bbox + covering cell."""
-    pts = edges.withColumn("pts", _points())
+    pts = edges.withColumn("pts", edge_points())
     segs = (
         pts.select(
-            "edge_key",
+            *_KEY,
             F.expr("""
               transform(sequence(0, size(pts) - 2), i -> struct(
                 pts[i].ord AS aord, pts[i].lon AS ax, pts[i].lat AS ay,
                 pts[i+1].ord AS bord, pts[i+1].lon AS bx, pts[i+1].lat AS by))
             """).alias("segs"))
-        .select("edge_key", F.explode("segs").alias("s"))
-        .select("edge_key", "s.*")
+        .select(*_KEY, F.explode("segs").alias("s"))
+        .select(*_KEY, "s.*")
     )
     segs = segs.withColumns({
         "minx": F.least("ax", "bx"), "maxx": F.greatest("ax", "bx"),
@@ -111,8 +93,8 @@ def _proper_intersection(ax1: pd.Series, ay1: pd.Series, bx1: pd.Series, by1: pd
 
 
 def find_intersections(edges: DataFrame) -> DataFrame:
-    """(edge_key, ord double, lon, lat) split points from proper
-    intersections between segments of DIFFERENT edges."""
+    """(way_id, seg, _piece, ord double, lon, lat) split points from
+    proper intersections between segments of DIFFERENT edges."""
     # materialize once: the cell-keyed SELF-join would otherwise recompute
     # the explode/window segment pipeline for each side (self-joins
     # re-execute their subtree per side — repo rule)
@@ -122,91 +104,89 @@ def find_intersections(edges: DataFrame) -> DataFrame:
                           for c in df.columns])
     l = pfx(segs, "l_")
     r = pfx(segs, "r_")
+    lkey = [f"l_{k}" for k in _KEY]
+    rkey = [f"r_{k}" for k in _KEY]
     pairs = (
         l.join(r, "cell_id")
-        .filter(F.col("l_edge_key") < F.col("r_edge_key"))
+        .filter(F.struct(*lkey) < F.struct(*rkey))
         .filter((F.col("l_minx") <= F.col("r_maxx"))
                 & (F.col("l_maxx") >= F.col("r_minx"))
                 & (F.col("l_miny") <= F.col("r_maxy"))
                 & (F.col("l_maxy") >= F.col("r_miny")))
-        .dropDuplicates(["l_edge_key", "l_aord", "r_edge_key", "r_aord"])
+        .dropDuplicates([*lkey, "l_aord", *rkey, "r_aord"])
     )
     hits = pairs.withColumn(
         "ix", _proper_intersection(
             F.col("l_ax"), F.col("l_ay"), F.col("l_bx"), F.col("l_by"),
             F.col("r_ax"), F.col("r_ay"), F.col("r_bx"), F.col("r_by")),
     ).filter(F.col("ix.hit"))
-    left_pts = hits.select(
-        F.col("l_edge_key").alias("edge_key"),
-        (F.col("l_aord") + F.col("ix.t1") * (F.col("l_bord") - F.col("l_aord"))).alias("ord"),
-        F.col("ix.x").alias("lon"), F.col("ix.y").alias("lat"))
-    right_pts = hits.select(
-        F.col("r_edge_key").alias("edge_key"),
-        (F.col("r_aord") + F.col("ix.t2") * (F.col("r_bord") - F.col("r_aord"))).alias("ord"),
-        F.col("ix.x").alias("lon"), F.col("ix.y").alias("lat"))
-    return left_pts.unionByName(right_pts).dropDuplicates(["edge_key", "ord"])
+
+    def side_pts(p, t):
+        aord, bord = F.col(f"{p}aord"), F.col(f"{p}bord")
+        return hits.select(
+            *[F.col(f"{p}{k}").alias(k) for k in _KEY],
+            (aord + F.col(t) * (bord - aord)).alias("ord"),
+            F.col("ix.x").alias("lon"), F.col("ix.y").alias("lat"))
+    return (side_pts("l_", "ix.t1").unionByName(side_pts("r_", "ix.t2"))
+            .dropDuplicates([*_KEY, "ord"]))
 
 
 def split_edges_at(edges: DataFrame, splits: DataFrame) -> DataFrame:
-    """Rebuild every edge that has points in ``splits`` (edge_key, ord,
-    lon, lat) with them inserted as new vertices, flagged ``_changed``;
-    every other edge keeps its row, unflagged.
+    """Rebuild every edge that has points in ``splits`` (way_id, seg,
+    _piece, ord, lon, lat) with them inserted as new vertices, flagged
+    ``_changed``; every other edge keeps its row, unflagged.
 
     The G2 segmentation, done per row: each edge's split points arrive
     as one list, the augmented point list is sorted by ``ord``, its ends
-    and split points are the vertices, and piece ``seg`` runs from vertex
-    ``seg`` to vertex ``seg + 1`` — one projection and one explode."""
-    cuts = splits.groupBy("edge_key").agg(F.collect_list(F.struct(
+    and split points are the vertices, and piece ``j`` runs from vertex
+    ``j`` to vertex ``j + 1`` — one projection and one explode.  A piece
+    keeps every column of its edge but the geometry (standardized west ->
+    east, bbox recomputed) and appends ``j`` to ``_piece``."""
+    cols = edges.columns
+    cuts = splits.groupBy(*_KEY).agg(F.collect_list(F.struct(
         "ord", "lon", "lat", F.lit(True).alias("cut"))).alias("cuts"))
-    aug = edges.join(cuts, "edge_key", "left").withColumn(
+    aug = edges.join(cuts, _KEY, "left").withColumn(
         "aug", F.when(F.col("cuts").isNotNull(), F.array_sort(F.concat(
-            F.transform(_points(), lambda p: p.withField("cut", F.lit(False))),
+            F.transform(edge_points(), lambda p: p.withField("cut", F.lit(False))),
             F.col("cuts")))))
     aug = aug.withColumn("vidx", F.expr(
         "filter(sequence(0, size(aug) - 1),"
         " i -> aug[i].cut OR i IN (0, size(aug) - 1))"))
-    pieces = aug.select(*_EDGE_COLS, F.posexplode_outer(F.when(
+    pieces = aug.select(*cols, F.posexplode_outer(F.when(
         F.col("cuts").isNotNull(), F.expr(
             "transform(sequence(0, size(vidx) - 2),"
             " j -> slice(aug, vidx[j] + 1, vidx[j + 1] - vidx[j] + 1))")))
-        .alias("seg", "p"))
-    # an unsplit edge (p null) passes through as piece a -> b = v1 -> v2
-    kept = F.col("p").isNull()
-    mids = F.slice("p", 2, F.greatest(F.size("p") - 2, F.lit(0)))
-    pieces = pieces.select(
-        F.concat_ws("#", "edge_key", "seg").alias("edge_key"),
-        F.coalesce(F.col("p")[0]["lon"], "v1_lon").alias("a_lon"),
-        F.coalesce(F.col("p")[0]["lat"], "v1_lat").alias("a_lat"),
-        F.coalesce(F.element_at("p", -1)["lon"], "v2_lon").alias("b_lon"),
-        F.coalesce(F.element_at("p", -1)["lat"], "v2_lat").alias("b_lat"),
-        F.when(kept, F.col("shape_pts")).otherwise(F.concat_ws(";", F.transform(
-            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))))
-        .alias("mid"),
-        (~kept).alias("_changed"))
-    # a rewritten piece is oriented west -> east; an unsplit edge keeps
-    # its orientation (the strict test would flip a vertical one)
-    fwd = ~F.col("_changed") | (F.col("a_lon") < F.col("b_lon"))
-    rev = F.concat_ws(";", F.reverse(F.split(F.col("mid"), ";")))
-    return pieces.select(
-        "edge_key",
-        F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-        F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-        F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-        F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-        F.when(F.col("mid") == "", F.lit(None)).otherwise(
-            F.when(fwd, F.col("mid")).otherwise(rev)).alias("shape_pts"),
-        "_changed")
+        .alias("j", "p"))
+    # an unsplit edge (p null) passes through unchanged; a piece is
+    # oriented west -> east (an unsplit vertical edge keeps its direction)
+    split = F.col("p").isNotNull()
+    pieces = pieces.withColumns(polyline("p"))
+    rewritten = {**west_to_east(), **bbox_of("p"),
+                 "_piece": F.concat("_piece", F.array("j"))}
+    return pieces.select(*[
+        F.when(split, rewritten[c]).otherwise(F.col(c)).alias(c)
+        if c in rewritten else c for c in cols], split.alias("_changed"))
 
 
 def planarize(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
     """Iterate find-intersections / split until planar (bounded rounds).
 
-    ``edges`` columns: edge_key string + endpoint/shape columns as in
-    graph_build output.  Each round (``plans.lineage.fixpoint``) is one
-    cell-keyed self-join — no driver-side geometry — that rewrites only
-    the edges with split points (flagged ``_changed``); every other edge
-    keeps its row, key and orientation.  The loop stops on the first
-    round that splits nothing, so pre-noded input costs one round and
-    comes back as it went in."""
-    return fixpoint(lambda cur: split_edges_at(cur, find_intersections(cur)),
-                    edges, max_rounds, "planarize")
+    ``edges`` are barrier-edge rows as ``split_ways_to_edges`` emits them:
+    ``(way_id, seg, v1_lon..v2_lat, shape_pts, min_lon..max_lat)`` plus
+    any columns (``tag_sig``) that pass through.  Each round
+    (``plans.lineage.fixpoint``) is one cell-keyed self-join — no
+    driver-side geometry — that rewrites only the edges with split points
+    (flagged ``_changed``); every other edge keeps its row and
+    orientation.  The loop stops on the first round that splits nothing,
+    so pre-noded input costs one round.  Last, ``seg`` is renumbered
+    densely per way in point order (parent ``seg``, then piece), so a way
+    with no split keeps its numbering."""
+    # the first round reads its input twice (intersection self-join and
+    # split join): derive it once
+    start = edges.withColumn(
+        "_piece", F.array().cast("array<int>")).localCheckpoint(eager=False)
+    flat = fixpoint(lambda cur: split_edges_at(cur.drop("_changed"),
+                                               find_intersections(cur)),
+                    start, max_rounds, "planarize")
+    w = Window.partitionBy("way_id").orderBy("seg", "_piece")
+    return flat.withColumn("seg", F.row_number().over(w) - 1).drop("_piece")

@@ -43,6 +43,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+
+
 def ensure_metrics_survive(df: DataFrame) -> None:
     """Keep drop counters reliable: AQE's empty-relation propagation prunes
     CollectMetrics nodes when a downstream shuffle stage turns out empty at
@@ -52,17 +55,13 @@ def ensure_metrics_survive(df: DataFrame) -> None:
     short-circuit; applied to the session only when a caller attaches an
     observation."""
     spark = df.sparkSession
-    key = "spark.sql.adaptive.optimizer.excludedRules"
     rule = ("org.apache.spark.sql.execution.adaptive."
             "AQEPropagateEmptyRelation")
-    try:
-        cur = spark.conf.get(key)
-    except Exception:
-        cur = None
+    cur = spark.conf.get(_EXCLUDED_RULES, None)
     if not cur:
-        spark.conf.set(key, rule)
+        spark.conf.set(_EXCLUDED_RULES, rule)
     elif rule not in cur:
-        spark.conf.set(key, cur + "," + rule)
+        spark.conf.set(_EXCLUDED_RULES, cur + "," + rule)
 
 
 _cut_lineage_warned = False
@@ -398,21 +397,29 @@ class LineageStore:
         # commit (Iceberg takes both counters from write-task metrics).
         # AQE's empty-relation pruning would drop the CollectMetrics node
         # exactly when todo is empty (Observation.get then hangs) — the
-        # shared exclusion helper guards that.
+        # shared exclusion helper guards that, for this write only: the
+        # session's previous setting is back once the counters are read.
+        prev_excluded = spark.conf.get(_EXCLUDED_RULES, None)
         ensure_metrics_survive(todo)
-        obs = Observation(f"lineage_{stage}_{cid}_{uuid.uuid4().hex[:8]}")
-        staged = (todo.withColumn("_commit", F.lit(cid))
-                  .observe(obs,
-                           F.count(F.lit(1)).alias("rows_added"),
-                           F.collect_set(partition_col)
-                           .alias("added_partitions")))
-        (staged.write.mode("append")
-         .partitionBy(partition_col, "_commit").parquet(out_dir))
-        # the files are on disk but INVISIBLE until the snapshot record
-        # lands — a kill between write and commit leaves orphan files that
-        # no read will ever include (and a re-run re-adds their partitions
-        # under a new commit id)
-        metrics = obs.get
+        try:
+            obs = Observation(f"lineage_{stage}_{cid}_{uuid.uuid4().hex[:8]}")
+            staged = (todo.withColumn("_commit", F.lit(cid))
+                      .observe(obs,
+                               F.count(F.lit(1)).alias("rows_added"),
+                               F.collect_set(partition_col)
+                               .alias("added_partitions")))
+            (staged.write.mode("append")
+             .partitionBy(partition_col, "_commit").parquet(out_dir))
+            # the files are on disk but INVISIBLE until the snapshot record
+            # lands — a kill between write and commit leaves orphan files
+            # that no read will ever include (and a re-run re-adds their
+            # partitions under a new commit id)
+            metrics = obs.get
+        finally:
+            if prev_excluded is None:
+                spark.conf.unset(_EXCLUDED_RULES)
+            else:
+                spark.conf.set(_EXCLUDED_RULES, prev_excluded)
         added = list(metrics["added_partitions"] or [])
         rows_added = int(metrics["rows_added"])
         snaps.append({
