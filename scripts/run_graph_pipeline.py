@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -44,23 +43,14 @@ from urbanistic_polygons_spark.operators.landuse_join import (  # noqa: E402
     assign_landuse, dominant_type, landuse_rings)
 from urbanistic_polygons_spark.operators.merge import (  # noqa: E402
     merge_faces, segment_resistance)
-from urbanistic_polygons_spark.plans.lineage import LineageStore  # noqa: E402
+from urbanistic_polygons_spark.plans.lineage import (  # noqa: E402
+    LineageStore, run_stage)
 
 
 def run(spark, workdir: str, k: int = 6,
         merge_threshold: int = 3) -> dict:
     store = LineageStore(workdir)
     stages: dict[str, dict] = {}
-
-    def run_stage(name, df, partition_col):
-        t0 = time.perf_counter()
-        out = store.checkpoint(df, name, partition_col)
-        stages[name] = {
-            "rows": store.counters(name).get("n_rows"),
-            "partitions": store.counters(name).get("n_partitions"),
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-        return out
 
     nodes_pdf, ways_pdf = datagen.gen_ways_grid(k=k, seed=44, jitter=0.0)
     nodes = spark.createDataFrame(
@@ -75,33 +65,34 @@ def run(spark, workdir: str, k: int = 6,
     # stage 1: entity tables (vertex/edge GUIDs = the cross-partition
     # join keys, reference TiledBarrierGraphSerializer.cs:14-85)
     vertices, g_edges = build_graph_tables(edges)
-    run_stage("graph_vertices", vertices, "tile_id")
-    run_stage("graph_edges", g_edges, "v1_tile")
+    run_stage(store, stages, "graph_vertices", vertices, "tile_id")
+    run_stage(store, stages, "graph_edges", g_edges, "v1_tile")
 
     # stage 2: faces (checkpoint consumed by every later stage: resume
-    # after a kill re-reads the committed faces, never re-walks)
-    faces = build_faces(edges)
-    faces = run_stage("faces", faces, "anchor_cell")
-    faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
+    # after a kill re-reads the committed faces, never re-walks; each face
+    # has one anchor_cell, so it lives in one atomically committed
+    # partition and the read-back holds no duplicates)
+    faces = run_stage(store, stages, "faces", build_faces(edges),
+                      "anchor_cell")
 
     # stage 3: dominant landuse per face
     rings = landuse_rings(nodes, classify_landuse_ways(spark, ways))
     dom = (dominant_type(assign_landuse(faces, rings))
            .join(faces.select("face_guid", "anchor_cell"), "face_guid"))
-    dom = run_stage("landuse", dom, "anchor_cell")
+    dom = run_stage(store, stages, "landuse", dom, "anchor_cell")
 
     # stage 4: merge-by-similarity regions over the same planar edges
     seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
     merged = merge_faces(faces, seg_res, merge_threshold,
                          dominant=dom.select("face_guid", "dominant_cls"))
-    merged = run_stage("merge", merged, "anchor_cell")
+    merged = run_stage(store, stages, "merge", merged, "anchor_cell")
 
     # stage 5: merged interior faces -> z14 MVT blobs
     from urbanistic_polygons_spark.sources.mvt import faces_to_mvt
     tiles = faces_to_mvt(
         merged.select("face_guid", "ring", "min_lon", "min_lat",
                       "max_lon", "max_lat"))
-    run_stage("tiles", tiles.select(
+    run_stage(store, stages, "tiles", tiles.select(
         "tile_z", "tile_x", "tile_y", "n_features",
         F.length("mvt").alias("mvt_bytes"),
         F.col("tile_y").alias("tile_prefix")), "tile_prefix")

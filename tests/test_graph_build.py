@@ -70,6 +70,18 @@ def test_faces_partition_invariance(spark, grid):
     b = build_faces(barrier_edges(nodes.repartition(7),
                                   ways.repartition(5))).toPandas()
     assert sorted(a.face_guid) == sorted(b.face_guid)
+    # a face seen from several anchors keeps one anchor_cell (the
+    # partition key of the faces, landuse and merge stages) by rule, not
+    # by which copy the session's shuffle partitioning meets first
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "3")
+        c = build_faces(barrier_edges(nodes, ways)).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    anchors = lambda df: dict(zip(df.face_guid, df.anchor_cell))  # noqa: E731
+    assert anchors(a) == anchors(c)
 
 
 def test_build_faces_planarizes_crossings(spark):

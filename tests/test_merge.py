@@ -146,11 +146,13 @@ def test_dominance_gate_splits_regions(lattice):
 # through a job group.  Measured with the barrier edges derived in one
 # pass (planarize carries tag_sig, so split_ways_to_edges' plan runs
 # once): 134-135 fresh / 140-141 resume, down from 142-143 / 148-149
-# when the tag_sig join-back ran the split a second time.  The ceilings
-# add two jobs for AQE submitting its query stages as jobs in a
-# timing-dependent grouping: a loop that adds a probe job per round, or
-# a second derivation of the split edges, fails here.
-GRAPH_BUILD_JOBS = {"fresh": 137, "resume": 143}
+# when the tag_sig join-back ran the split a second time; 132 / 138
+# since the faces are deduped once, inside build_faces, instead of again
+# after their commit.  The ceilings add two jobs for AQE submitting its
+# query stages as jobs in a timing-dependent grouping: a loop that adds
+# a probe job per round, or a second derivation of the split edges,
+# fails here.
+GRAPH_BUILD_JOBS = {"fresh": 134, "resume": 140}
 # the planar edge set alone, barrier_edges(...).localCheckpoint(eager=True)
 # at k=4: 21 jobs (30 with the tag_sig join-back)
 BARRIER_EDGES_JOBS = 23

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import rings
 from ._shared import _pts_df
 
 # ---------------------------------------------------------------------------
@@ -56,8 +57,7 @@ def q_faces_grid_spark(spark, sf_dir):
     oracle-exact; cycle order + UUIDv5 guids are pinned by the pytest
     suite) plus edge count and exact bbox doubles."""
     faces = _grid_faces(spark)
-    pts = F.filter(F.split(F.col("ring"), ";"),
-                   lambda x: F.length(x) > 0)
+    pts = rings.tokens("ring")
     return faces.select(
         F.array_join(F.array_sort(F.array_distinct(pts)), "|").alias("verts"),
         F.col("n_edges").cast("long").alias("n_edges"),
@@ -118,10 +118,10 @@ def _grid_landuse(spark):
     from ..operators.classify import classify_landuse_ways
     from ..operators.landuse_join import landuse_rings
     nodes, ways = _grid_graph(spark)
-    rings = landuse_rings(nodes, classify_landuse_ways(spark, ways)
-                          ).localCheckpoint(eager=True)
-    _GRID_LANDUSE_CACHE[key] = rings
-    return rings
+    lu = landuse_rings(nodes, classify_landuse_ways(spark, ways)
+                       ).localCheckpoint(eager=True)
+    _GRID_LANDUSE_CACHE[key] = lu
+    return lu
 
 
 def q_faces_landuse_spark(spark, sf_dir):
@@ -285,13 +285,11 @@ def q_density_mvt_spark(spark, sf_dir):
     x1 = lon((F.col("x_end") + 1) * 10000)
     y0 = lat(F.col("gy") * 10000)         # north edge (smaller tile y)
     y1 = lat((F.col("gy") + 1) * 10000)   # south edge
-    pt = lambda a, b: F.format_string("%.9f %.9f", a, b)  # noqa: E731
     faces = seg.select(
         "gy", "x_start", "x_end",
         F.md5(F.format_string("%d_%d", F.col("gy"), F.col("x_start")))
         .alias("face_guid"),
-        F.concat_ws(";", pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1),
-                    pt(x0, y0)).alias("ring"))
+        rings.box(x0, y1, x1, y0).alias("ring"))
     # encode the density layer at z11 (the serving pyramid level): cell-
     # sized segments grouped into 64x-coarser tiles keeps the per-tile
     # kernel fed with real batches instead of 10k one-feature groups.
@@ -417,15 +415,7 @@ def q_tile_serve_spark(spark, sf_dir):
     from ..sources.mvt import faces_to_mvt
 
     faces = _grid_faces(spark)
-    cov = faces.withColumn(
-        "cell_id",
-        F.explode_outer(F.flatten(F.transform(
-            F.sequence(CELLS.tile_y(F.col("max_lat")),
-                       CELLS.tile_y(F.col("min_lat"))),
-            lambda cy: F.transform(
-                F.sequence(CELLS.tile_x(F.col("min_lon")),
-                           CELLS.tile_x(F.col("max_lon"))),
-                lambda cx: cy * F.lit(1 << 14) + cx)))))
+    cov = faces.withColumn("cell_id", F.explode_outer(CELLS.bbox_cells()))
     # the z12 request set = parents of every covered z14 cell
     requests = (cov.select(CELLS.parent_cell(
         F.col("cell_id"), 14, 12).alias("parent")).distinct())

@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 
 from . import kernels
+from .functions import rings
 
 # Belgium-ish bbox, same region as the reference preprocessor
 # (Preprocessor/Program.cs:36: (2.3785,51.5224)-(6.5094,49.4002))
@@ -115,11 +116,10 @@ def gen_polygons(n_polys: int, seed: int = 43) -> pd.DataFrame:
         rads = r[i] * rng.uniform(0.6, 1.0, k)
         lons = cx[i] + rads * np.cos(angles)
         lats = cy[i] + rads * np.sin(angles) * 0.62  # approx cos(51 deg)
-        # close the ring, clockwise (reference rings are clockwise)
+        # clockwise (reference rings are clockwise); the ring text below
+        # repeats the first point last
         if not kernels.is_clockwise(lons, lats):
             lons, lats = lons[::-1], lats[::-1]
-        ring = list(zip(lons.tolist(), lats.tolist()))
-        ring.append(ring[0])
         cells = kernels.tiles_for_box(float(lons.min()), float(lats.min()),
                                       float(lons.max()), float(lats.max()))
         tx, ty = kernels.world_to_tile(lons, lats)
@@ -131,7 +131,8 @@ def gen_polygons(n_polys: int, seed: int = 43) -> pd.DataFrame:
         rows.append({
             "polygon_guid": guid,
             "cells": cells.tolist(),
-            "ring": ";".join(f"{lo:.9f} {la:.9f}" for lo, la in ring),
+            "ring": rings.fmt(np.append(lons, lons[0]),
+                              np.append(lats, lats[0])),
             "min_lon": float(lons.min()), "min_lat": float(lats.min()),
             "max_lon": float(lons.max()), "max_lat": float(lats.max()),
             "landuse": {str(cls): pct},

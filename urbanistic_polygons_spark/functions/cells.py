@@ -59,6 +59,17 @@ def cell_bounds(cell: Column, zoom: int = DEFAULT_ZOOM):
     return min_lon, min_lat, max_lon, max_lat
 
 
+def bbox_cells(min_lon: str = "min_lon", min_lat: str = "min_lat",
+               max_lon: str = "max_lon", max_lat: str = "max_lat") -> Column:
+    """array<long> of the z14 cells covering the bbox in the named columns,
+    row by row from the top."""
+    return F.flatten(F.transform(
+        F.sequence(tile_y(F.col(max_lat)), tile_y(F.col(min_lat))),
+        lambda cy: F.transform(
+            F.sequence(tile_x(F.col(min_lon)), tile_x(F.col(max_lon))),
+            lambda cx: cy * F.lit(1 << DEFAULT_ZOOM) + cx)))
+
+
 def neighbor_cells(cell: Column, ring: int = 1, zoom: int = DEFAULT_ZOOM) -> Column:
     """array<long> of the distinct (2r+1)^2 halo cells around ``cell``, row
     by row from the top — the eager halo replacing the reference's lazy

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import rings
 from .merge import face_boundary_segments
 
 
@@ -139,11 +140,10 @@ def dissolve_rings(merged: DataFrame) -> DataFrame:
                     prev, cur = cur, nxt
                 if cur == start:
                     ring.append(start)
-                    rows.append((region, len(ring) - 1, ";".join(ring)))
+                    rows.append((region, len(ring) - 1, rings.join(ring)))
         # largest |shoelace| = outer ring
         def area2(ring_s: str) -> float:
-            pts = [tuple(map(float, p.split(" ")))
-                   for p in ring_s.split(";")]
+            pts = rings.parse(ring_s).tolist()
             return abs(sum(x0 * y1 - x1 * y0 for (x0, y0), (x1, y1)
                            in zip(pts, pts[1:])))
         rows.sort(key=lambda r: (-area2(r[2]), r[2]))

@@ -28,6 +28,7 @@ import numpy as np
 import pandas as pd
 
 from .. import kernels
+from ..functions import rings
 
 UNASSIGNABLE = 0  # sentinel face (reference Faces.cs:25-26)
 
@@ -315,6 +316,7 @@ FACES_OUT_SCHEMA = (
     "anchor_cell long, face_guid string, ring string, "
     "min_lon double, min_lat double, max_lon double, max_lat double, n_edges int"
 )
+_FACES_OUT_COLS = [f.split()[0] for f in FACES_OUT_SCHEMA.split(", ")]
 
 
 def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -327,9 +329,7 @@ def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     content-addressed GUID.
     """
     if pdf.empty:
-        return pd.DataFrame(
-            columns=["anchor_cell", "face_guid", "ring", "min_lon", "min_lat",
-                     "max_lon", "max_lat", "n_edges"])
+        return pd.DataFrame(columns=_FACES_OUT_COLS)
     anchor = int(pdf["anchor_cell"].iloc[0])
     halo_ring = int(pdf["halo_ring"].iloc[0]) if "halo_ring" in pdf.columns else 1
     g = TileGraph()
@@ -345,9 +345,7 @@ def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     for row in pdf.itertuples(index=False):
         v1 = vid(row.v1_lon, row.v1_lat)
         v2 = vid(row.v2_lon, row.v2_lat)
-        shape = []
-        if isinstance(row.shape_pts, str) and row.shape_pts:
-            shape = [tuple(map(float, p.split())) for p in row.shape_pts.split(";")]
+        shape = list(map(tuple, rings.parse(row.shape_pts).tolist()))
         e = g.add_edge(v1, v2, shape)
         in_anchor_edges.append(bool(row.in_anchor))
 
@@ -396,14 +394,12 @@ def faces_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows.append({
             "anchor_cell": anchor,
             "face_guid": guid,
-            "ring": ";".join(f"{lo:.9f} {la:.9f}" for lo, la in ring),
+            "ring": rings.fmt(lons, lats),
             "min_lon": float(lons.min()), "min_lat": float(lats.min()),
             "max_lon": float(lons.max()), "max_lat": float(lats.max()),
             "n_edges": int(edges_per_face.get(f, 0)),
         })
-    return pd.DataFrame(rows, columns=["anchor_cell", "face_guid", "ring",
-                                       "min_lon", "min_lat", "max_lon",
-                                       "max_lat", "n_edges"])
+    return pd.DataFrame(rows, columns=_FACES_OUT_COLS)
 
 
 def _ring_guid(lons: np.ndarray, lats: np.ndarray) -> str:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..functions import rings
 from ..plans.lineage import fixpoint
 
 log = logging.getLogger(__name__)
@@ -91,24 +92,16 @@ def polyline(pts: str) -> dict:
     mids = F.slice(pts, 2, F.greatest(F.size(pts) - 2, F.lit(0)))
     return {"a_lon": first["lon"], "a_lat": first["lat"],
             "b_lon": last["lon"], "b_lat": last["lat"],
-            "mid_str": F.concat_ws(";", F.transform(
-                mids, lambda p: F.format_string("%.9f %.9f",
-                                                p["lon"], p["lat"])))}
+            "mid_str": rings.text(mids)}
 
 
 def edge_points() -> F.Column:
     """The one parse of an edge row's geometry: v1, the ``shape_pts``
     points, v2 as ``array<struct<ord double, lon, lat>>`` (``ord`` is the
     point's index along v1 -> v2)."""
-    mids = F.when(
-        F.col("shape_pts").isNotNull() & (F.col("shape_pts") != ""),
-        F.transform(
-            F.split("shape_pts", ";"),
-            lambda p, i: F.struct(
-                (i + 1).cast("double").alias("ord"),
-                F.split(p, " ").getItem(0).cast("double").alias("lon"),
-                F.split(p, " ").getItem(1).cast("double").alias("lat")))
-    ).otherwise(F.array())
+    mids = F.transform(rings.points("shape_pts"), lambda p, i: F.struct(
+        (i + 1).cast("double").alias("ord"), p["lon"].alias("lon"),
+        p["lat"].alias("lat")))
     head = F.array(F.struct(F.lit(0.0).alias("ord"),
                             F.col("v1_lon").alias("lon"),
                             F.col("v1_lat").alias("lat")))
@@ -150,7 +143,7 @@ def _reverse_shape(shape: F.Column) -> F.Column:
     """``shape_pts`` text with its points in reverse order (null stays
     null)."""
     return F.when(shape.isNull(), F.lit(None)).otherwise(
-        F.concat_ws(";", F.reverse(F.split(shape, ";"))))
+        rings.concat(F.reverse(rings.tokens(shape))))
 
 
 def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
@@ -206,8 +199,8 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     (degree count + merge join); the in-kernel variant in operators/faces.py
     covers the tile-local case, this one the global pre-pass.
     """
-    vkey1 = F.format_string("%.9f %.9f", F.col("v1_lon"), F.col("v1_lat"))
-    vkey2 = F.format_string("%.9f %.9f", F.col("v2_lon"), F.col("v2_lat"))
+    vkey1 = rings.token(F.col("v1_lon"), F.col("v1_lat"))
+    vkey2 = rings.token(F.col("v2_lon"), F.col("v2_lat"))
     ekey = F.format_string("%s#%s", F.col("way_id").cast("string"),
                            F.col("seg").cast("string"))
     cols = edges.columns
@@ -269,9 +262,8 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                 F.col("a.f_lon").alias("a_lon"), F.col("a.f_lat").alias("a_lat"),
                 F.col("b.f_lon").alias("b_lon"), F.col("b.f_lat").alias("b_lat"),
                 # a.shp (a->vk) + vk + reverse(b.shp) (vk->b)
-                F.concat_ws(";", F.filter(F.array(
-                    F.col("a.shp"), F.col("vk"), _reverse_shape(F.col("b.shp"))
-                ), lambda x: x.isNotNull())).alias("mid_str"))
+                rings.concat("a.shp", "vk", _reverse_shape(F.col("b.shp")))
+                .alias("mid_str"))
         )
         new_edges = (merged.withColumns(west_to_east())
                      .withColumn("pts", edge_points())
@@ -296,13 +288,7 @@ def bucket_edges_by_cell(edges: DataFrame, halo_ring: int = 1) -> DataFrame:
     it.  Heavy cells are later salted by the caller if needed.
     """
     # anchor cells covered by the edge bbox (cells the edge itself touches)
-    covered = edges.withColumn(
-        "own_cell",
-        F.explode(F.flatten(F.transform(
-            F.sequence(C.tile_y(F.col("max_lat")), C.tile_y(F.col("min_lat"))),
-            lambda cy: F.transform(
-                F.sequence(C.tile_x(F.col("min_lon")), C.tile_x(F.col("max_lon"))),
-                lambda cx: cy * F.lit(1 << 14) + cx)))))
+    covered = edges.withColumn("own_cell", F.explode(C.bbox_cells()))
     # each covering cell's halo becomes an anchor that sees this edge
     with_anchor = covered.withColumn(
         "anchor_cell", F.explode(C.neighbor_cells(F.col("own_cell"), ring=halo_ring)))
@@ -332,6 +318,7 @@ GRAPH_EDGES_SCHEMA = (
     "v1_tile long, v2_tile long, way_id long, seg long, tag_sig string, "
     "shape_pts string, v1_lon double, v1_lat double, "
     "v2_lon double, v2_lat double")
+_GRAPH_EDGES_COLS = [f.split()[0] for f in GRAPH_EDGES_SCHEMA.split(", ")]
 
 
 def _edge_guids_kernel(batches):
@@ -342,7 +329,6 @@ def _edge_guids_kernel(batches):
     A Python loop over the Arrow batch on executors — never per-row
     through Spark."""
     import numpy as np
-    import pandas as pd
 
     from .. import kernels
 
@@ -354,17 +340,9 @@ def _edge_guids_kernel(batches):
         t1 = np.empty(n, dtype=np.int64)
         t2 = np.empty(n, dtype=np.int64)
         for i, r in enumerate(pdf.itertuples(index=False)):
-            lons = [r.v1_lon]
-            lats = [r.v1_lat]
-            if isinstance(r.shape_pts, str) and r.shape_pts:
-                for p in r.shape_pts.split(";"):
-                    a, b = p.split(" ")
-                    lons.append(float(a))
-                    lats.append(float(b))
-            lons.append(r.v2_lon)
-            lats.append(r.v2_lat)
-            lo = np.asarray(lons, np.float64)
-            la = np.asarray(lats, np.float64)
+            mid = rings.parse(r.shape_pts)
+            lo = np.concatenate(([r.v1_lon], mid[:, 0], [r.v2_lon]))
+            la = np.concatenate(([r.v1_lat], mid[:, 1], [r.v2_lat]))
             tx, ty = kernels.world_to_tile(lo, la)
             qx, qy = kernels.quantize(lo, la, tx, ty)
             tid = kernels.tile_local_id(tx, ty)
@@ -373,13 +351,8 @@ def _edge_guids_kernel(batches):
             v2g[i] = kernels.vertex_guid(qx[-1], qy[-1], tid[-1])
             t1[i] = tid[0]
             t2[i] = tid[-1]
-        yield pd.DataFrame({
-            "edge_guid": eg, "v1_guid": v1g, "v2_guid": v2g,
-            "v1_tile": t1, "v2_tile": t2,
-            "way_id": pdf["way_id"], "seg": pdf["seg"],
-            "tag_sig": pdf["tag_sig"], "shape_pts": pdf["shape_pts"],
-            "v1_lon": pdf["v1_lon"], "v1_lat": pdf["v1_lat"],
-            "v2_lon": pdf["v2_lon"], "v2_lat": pdf["v2_lat"]})
+        yield pdf.assign(edge_guid=eg, v1_guid=v1g, v2_guid=v2g,
+                         v1_tile=t1, v2_tile=t2)[_GRAPH_EDGES_COLS]
 
 
 def build_graph_tables(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -457,10 +430,16 @@ def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
     faces = results[0]
     for r in results[1:]:
         faces = faces.unionByName(r)
-    # a face found from several anchors keeps the first copy the dedup
-    # meets, so it reads the cached kernel output (one partition per
-    # shuffle partition); the caches go once the faces are checkpointed
-    faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
+    # a face found from several anchors keeps the copy of its smallest
+    # anchor_cell (a reference-point rule), so its partition never
+    # depends on the session's partitioning; the caches go once the
+    # faces are checkpointed
+    cols = faces.columns
+    first = ["anchor_cell", *(c for c in cols if c != "anchor_cell")]
+    faces = (faces.groupBy("face_guid")
+             .agg(F.min(F.struct(*first)).alias("f"))
+             .select(*(F.col(f"f.{c}") for c in cols))
+             .localCheckpoint(eager=True))
     for df in cached:
         df.unpersist()
     return faces

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..functions import rings
 
 EARTH_RADIUS_M = 6371000.0
 
@@ -39,14 +40,14 @@ def polygon_centroids(polygons: DataFrame) -> DataFrame:
     centroid = mean of ring vertices (closing dup excluded), computed once
     per polygon with higher-order array functions before the cells are
     exploded, so the interpreted ring parse runs once per polygon."""
-    ring_pts = F.slice(F.split(F.col("ring"), ";"), 1,
-                       F.size(F.split(F.col("ring"), ";")) - 1)
-    as_lon = F.transform(ring_pts, lambda p: F.split(p, " ").getItem(0).cast("double"))
-    as_lat = F.transform(ring_pts, lambda p: F.split(p, " ").getItem(1).cast("double"))
-    return polygons.select(
+    pts = polygons.select("polygon_guid", "cells",
+                          rings.points("ring").alias("p"))
+    n = F.size("p") - 1  # closing dup excluded
+    mean = lambda f: F.aggregate(  # noqa: E731
+        F.slice("p", 1, n), F.lit(0.0), lambda a, q: a + q[f]) / n
+    return pts.select(
         "polygon_guid", "cells",
-        (F.aggregate(as_lon, F.lit(0.0), lambda a, x: a + x) / F.size(as_lon)).alias("c_lon"),
-        (F.aggregate(as_lat, F.lit(0.0), lambda a, x: a + x) / F.size(as_lat)).alias("c_lat"),
+        mean("lon").alias("c_lon"), mean("lat").alias("c_lat"),
     ).select("polygon_guid", F.explode("cells").alias("poly_cell"),
              "c_lon", "c_lat")
 

@@ -21,6 +21,8 @@ results contribute 0 like the reference's catch block (:74-83).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -29,25 +31,19 @@ from pyspark.sql import types as T
 
 from .. import kernels
 from ..functions import cells as C
-
-
-def _parse_ring(s: str) -> np.ndarray:
-    pts = np.array([p.split() for p in s.split(";")], dtype=np.float64)
-    if len(pts) > 1 and (pts[0] == pts[-1]).all():
-        pts = pts[:-1]
-    return pts
+from ..functions import rings
+from .graph_build import bbox_of
 
 
 @F.pandas_udf(T.DoubleType())
 def overlap_ratio_udf(face_ring: pd.Series, lu_ring: pd.Series) -> pd.Series:
     """intersection_area(face, landuse) / face_area per candidate pair,
     vectorized per Arrow batch with per-ring parse caching."""
-    cache: dict[str, np.ndarray] = {}
-
+    @functools.cache
     def ring(s: str) -> np.ndarray:
-        if s not in cache:
-            cache[s] = _parse_ring(s)
-        return cache[s]
+        pts = rings.parse(s)
+        closed = len(pts) > 1 and (pts[0] == pts[-1]).all()
+        return pts[:-1] if closed else pts
 
     out = np.zeros(len(face_ring))
     for i, (fs, ls) in enumerate(zip(face_ring, lu_ring)):
@@ -65,17 +61,6 @@ def overlap_ratio_udf(face_ring: pd.Series, lu_ring: pd.Series) -> pd.Series:
             f[:, 0], f[:, 1], l[:, 0], l[:, 1])
         out[i] = min(inter / fa, 1.0)
     return pd.Series(out)
-
-
-def _with_cells(df: DataFrame) -> DataFrame:
-    """Explode bbox cover into cell_id rows (JVM-side sequence/transform)."""
-    return df.withColumn(
-        "cell_id",
-        F.explode(F.flatten(F.transform(
-            F.sequence(C.tile_y(F.col("max_lat")), C.tile_y(F.col("min_lat"))),
-            lambda cy: F.transform(
-                F.sequence(C.tile_x(F.col("min_lon")), C.tile_x(F.col("max_lon"))),
-                lambda cx: cy * F.lit(1 << 14) + cx)))))
 
 
 def landuse_rings(nodes: DataFrame, landuse_ways: DataFrame) -> DataFrame:
@@ -97,13 +82,8 @@ def landuse_rings(nodes: DataFrame, landuse_ways: DataFrame) -> DataFrame:
         .select(
             F.col("way_id").alias("lu_id"),
             "cls",
-            F.concat_ws(";", F.transform(
-                "p", lambda q: F.format_string("%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
-            F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
-            F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
-            F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
-            F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat"),
-        )
+            rings.text("p").alias("ring"),
+            *(v.alias(k) for k, v in bbox_of("p").items()))
     )
 
 
@@ -111,11 +91,11 @@ def assign_landuse(faces: DataFrame, landuse: DataFrame) -> DataFrame:
     """faces(face_guid, ring, min_lon..max_lat) x landuse(lu_id, cls, ring,
     min_lon..max_lat) -> (face_guid, cls, pct) rows; pct = summed overlap
     ratio per type (reference types[type] += percentage, :85-91)."""
-    f = _with_cells(faces).select(
+    f = faces.withColumn("cell_id", F.explode(C.bbox_cells())).select(
         "cell_id", "face_guid", F.col("ring").alias("f_ring"),
         F.col("min_lon").alias("f_minx"), F.col("min_lat").alias("f_miny"),
         F.col("max_lon").alias("f_maxx"), F.col("max_lat").alias("f_maxy"))
-    l = _with_cells(landuse).select(
+    l = landuse.withColumn("cell_id", F.explode(C.bbox_cells())).select(
         "cell_id", "lu_id", "cls", F.col("ring").alias("l_ring"),
         F.col("min_lon").alias("l_minx"), F.col("min_lat").alias("l_miny"),
         F.col("max_lon").alias("l_maxx"), F.col("max_lat").alias("l_maxy"))

@@ -32,21 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import rings
 from ..plans.lineage import cut_lineage
 from .dedup import near_dup_components
 
 #: segments whose boundary matches no classified barrier edge DO NOT
 #: merge: a missed segment-key join (filtered edge subset, or a
 #: formatting divergence between the Python-formatted ring tokens and
-#: the Java-formatted edge tokens on an exact decimal tie — dyadic
-#: coordinates only) must fail safe as "barrier unknown = keep apart",
-#: never as a silent merge across a motorway
+#: the Java-formatted edge tokens, which differ on about half of the
+#: coordinates whose shortest decimal ends in a 5 at the tenth place,
+#: e.g. 4.7000000045 -> 4.700000004 vs 4.700000005, functions/rings.py)
+#: must fail safe as "barrier unknown = keep apart", never as a silent
+#: merge across a motorway
 _DEFAULT_RESISTANCE = 1 << 30
-
-
-def _pts_col():
-    """ring 'lon lat;lon lat;...' -> array<string> of point tokens."""
-    return F.filter(F.split("ring", ";"), lambda x: F.length(x) > 0)
 
 
 def _seg_keys(pts: str):
@@ -62,7 +60,7 @@ def _seg_keys(pts: str):
 
 
 def _shoelace2() -> F.Column:
-    """2x the shoelace signed area of the 'xy' struct array (scalar-size
+    """2x the shoelace signed area of the 'xy' point array (scalar-size
     per ring -> JVM HOF is the right tool; repo rule keeps Arrow kernels
     for corpus-wide math only).  Negative => clockwise => interior face
     (kernels.signed_area convention; the right-turn walk of faces.py
@@ -70,16 +68,15 @@ def _shoelace2() -> F.Column:
     a = F.slice(F.col("xy"), 1, F.size(F.col("xy")) - 1)
     b = F.slice(F.col("xy"), 2, F.size(F.col("xy")) - 1)
     return F.aggregate(
-        F.zip_with(a, b, lambda p, q: p["x"] * q["y"] - q["x"] * p["y"]),
+        F.zip_with(a, b,
+                   lambda p, q: p["lon"] * q["lat"] - q["lon"] * p["lat"]),
         F.lit(0.0), lambda acc, v: acc + v)
 
 
 def interior_faces(faces: DataFrame) -> DataFrame:
     """Drop the unbounded outer face(s) by ring orientation (A7)."""
-    with_pts = faces.withColumn("_pts", _pts_col()).withColumn(
-        "xy", F.transform("_pts", lambda s: F.struct(
-            F.split(s, " ")[0].cast("double").alias("x"),
-            F.split(s, " ")[1].cast("double").alias("y"))))
+    with_pts = faces.withColumn("_pts", rings.tokens("ring")).withColumn(
+        "xy", rings.points("ring"))
     return (with_pts.withColumn("_area2", _shoelace2())
             .filter(F.col("_area2") < 0)
             .drop("xy", "_area2"))
@@ -90,7 +87,7 @@ def face_boundary_segments(faces: DataFrame) -> DataFrame:
     Input must carry ``face_guid`` and ``_pts`` (from interior_faces) or
     ``ring``."""
     df = faces if "_pts" in faces.columns else faces.withColumn(
-        "_pts", _pts_col())
+        "_pts", rings.tokens("ring"))
     df = df.withColumn("_segs", _seg_keys("_pts"))
     # rings are never empty -> explode_outer dodges the
     # InferFiltersFromGenerate interpreted-filter trap (repo rule)
@@ -101,13 +98,11 @@ def face_boundary_segments(faces: DataFrame) -> DataFrame:
 def edge_unit_segments(edges: DataFrame) -> DataFrame:
     """Standardized barrier edges (split_ways_to_edges output) -> one row
     per unit polyline segment: (way_id, seg_key).  The polyline is
-    v1 + shape points + v2, formatted with the SAME '%.9f %.9f' tokens
-    the face kernel emits, so segment keys match bit-for-bit."""
-    poly = F.concat(
-        F.array(F.format_string("%.9f %.9f", "v1_lon", "v1_lat")),
-        F.filter(F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-                 lambda x: F.length(x) > 0),
-        F.array(F.format_string("%.9f %.9f", "v2_lon", "v2_lat")))
+    v1 + shape points + v2 as the point tokens of ``functions.rings``,
+    the format the face kernel writes its rings in."""
+    poly = F.concat(F.array(rings.token("v1_lon", "v1_lat")),
+                    rings.tokens("shape_pts"),
+                    F.array(rings.token("v2_lon", "v2_lat")))
     df = edges.withColumn("_pts", poly).withColumn("_segs", _seg_keys("_pts"))
     return df.select("way_id", F.explode_outer("_segs").alias("seg_key"))
 

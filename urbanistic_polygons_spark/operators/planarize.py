@@ -55,12 +55,7 @@ def _segments(edges: DataFrame) -> DataFrame:
     })
     # covering cells of the segment bbox (segments are short: usually 1)
     return segs.withColumn(
-        "cell_id",
-        F.explode(F.flatten(F.transform(
-            F.sequence(C.tile_y(F.col("maxy")), C.tile_y(F.col("miny"))),
-            lambda cy: F.transform(
-                F.sequence(C.tile_x(F.col("minx")), C.tile_x(F.col("maxx"))),
-                lambda cx: cy * F.lit(1 << 14) + cx)))))
+        "cell_id", F.explode(C.bbox_cells("minx", "miny", "maxx", "maxy")))
 
 
 _HIT_SCHEMA = T.StructType([

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 SCALE = 1_000_000
 
 
@@ -38,8 +40,7 @@ def tfidf_topk(docs: DataFrame, terms: list[str], k: int = 20,
         # explode_outer: dodge the InferFiltersFromGenerate interpreted-
         # filter inlining (repo rule); the null row from an empty text is
         # dropped by the isin filter
-        F.explode_outer(F.filter(F.split(F.lower(text_col), " "),
-                                 lambda t: F.length(t) > 0)).alias("t"))
+        F.explode_outer(tokens(F.col(text_col))).alias("t"))
     qt = toks.filter(F.col("t").isin(list(terms)))
     # tf is |hits|-bounded (<= matching doc x term pairs) and feeds TWO
     # consumers (df derivation + the scoring join); materialize it once

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from .. import kernels
 from ..functions import cells as C
+from ..functions import rings
 
 
 def extract_geo_points(documents: DataFrame) -> DataFrame:
@@ -85,8 +86,7 @@ def pip_udf(ring: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
     codes, uniques = pd.factorize(ring)
     for code, rs in enumerate(uniques):
         idx = np.nonzero(codes == code)[0]
-        pts = np.array([p.split() for p in rs.split(";")], dtype=np.float64)
-        rx, ry = pts[:-1, 0], pts[:-1, 1]  # drop closing dup
+        rx, ry = rings.parse(rs)[:-1].T  # drop closing dup
         out[idx] = kernels.points_in_polygon(pxv[idx], pyv[idx], rx, ry)
     return pd.Series(out)
 

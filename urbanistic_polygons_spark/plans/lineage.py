@@ -176,6 +176,20 @@ def _counters(store, stage: str) -> dict:
             "committed_at": snaps[-1]["committed_at"]}
 
 
+def run_stage(store, stages: dict, name: str, df: DataFrame,
+              partition_col: str) -> DataFrame:
+    """Commit ``df`` as stage ``name`` of ``store`` and record its row and
+    partition counters and wall seconds in ``stages[name]``; returns the
+    committed read-back."""
+    t0 = time.perf_counter()
+    out = store.checkpoint(df, name, partition_col)
+    c = store.counters(name)
+    stages[name] = {"rows": c.get("n_rows"),
+                    "partitions": c.get("n_partitions"),
+                    "sec": round(time.perf_counter() - t0, 2)}
+    return out
+
+
 def _is_complete(store, stage: str, expected_partitions: int) -> bool:
     """At least ``expected_partitions`` partitions of ``stage`` are
     committed."""

@@ -9,28 +9,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def ring_to_geojson_coords(ring_col):
-    """'lon lat;lon lat;...' string ring -> GeoJSON coordinate array text
-    '[[lon,lat],[lon,lat],...]'."""
-    pts = F.split(ring_col, ";")
-    pair = lambda p: F.concat(
-        F.lit("["), F.split(p, " ").getItem(0), F.lit(","),
-        F.split(p, " ").getItem(1), F.lit("]"))
-    return F.concat(F.lit("["),
-                    F.concat_ws(",", F.transform(pts, pair)),
-                    F.lit("]"))
+from ..functions import rings
 
 
 def faces_to_geojson_features(faces: DataFrame) -> DataFrame:
     """faces(face_guid, ring, ...) -> (face_guid, geojson string): one
     Feature per face polygon (reference ToPolygonFeature, Faces.cs:228-246)."""
-    coords = ring_to_geojson_coords(F.col("ring"))
     feature = F.concat(
         F.lit('{"type":"Feature","properties":{"face_guid":"'),
         F.col("face_guid"),
         F.lit('"},"geometry":{"type":"Polygon","coordinates":['),
-        coords,
+        rings.geojson(F.col("ring")),
         F.lit("]}}"),
     )
     return faces.select("face_guid", feature.alias("geojson"))

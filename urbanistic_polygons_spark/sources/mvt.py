@@ -24,6 +24,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .. import kernels
+from ..functions import rings
 
 EXTENT = 4096
 
@@ -137,16 +138,15 @@ def encode_tile(tile_x: int, tile_y: int, zoom: int,
         # served directly via the E3 path); "ring": single-ring shorthand
         # (faces from the planar walk are hole-free by construction)
         ring_strs = feat.get("rings") or [feat["ring"]]
-        rings = []
+        quantized = []
         for rs in ring_strs:
-            pts = np.array([p.split() for p in rs.split(";")],
-                           dtype=np.float64)
+            pts = rings.parse(rs)
             qx = ((pts[:, 0] - min_lon) / (max_lon - min_lon)
                   * EXTENT).astype(np.int64)
             qy = ((max_lat - pts[:, 1]) / (max_lat - min_lat)
                   * EXTENT).astype(np.int64)
-            rings.append((qx, qy))
-        cmds = _geometry_polygon(rings)
+            quantized.append((qx, qy))
+        cmds = _geometry_polygon(quantized)
         if not cmds:
             continue
         tags: list[int] = []
